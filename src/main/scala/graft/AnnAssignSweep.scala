@@ -55,7 +55,7 @@ object AnnAssignSweep {
     // a no-op when the marker is present — the arms differ ONLY in the
     // assignment pass)
     val (storePath, _) = AnnIndex.stageAuto(spark, sfDir)
-    val cent = spark.read.parquet(s"$storePath/ivf_centroids").persist()
+    val cent = graft.engine.Tables.parquet(spark, s"$storePath/ivf_centroids").persist()
     println(s"[assign] centroids from $storePath (${cent.count()} rows)")
 
     def timed[T](label: String)(f: => T): T = {

@@ -66,7 +66,7 @@ object Bench {
     val QuadraticBaselines = Set("dedup_embedding", "dedup_embedding_lsh")
     val QuadraticMaxRows = 5000L
     val embRows =
-      try graft.engine.Tables(spark, sfDir, "embeddings").count()
+      try graft.engine.Tables.rowCount(spark, sfDir, "embeddings")
       catch { case _: Throwable => 0L }
     val quadSkipped = if (embRows > QuadraticMaxRows) {
       System.err.println(
@@ -111,7 +111,7 @@ object Bench {
       "dedup_ngram", "dedup_containment", "dedup_qa_report")
     val ExactAnchorMaxDocs = 1000000L
     val docRows =
-      try graft.engine.Tables(spark, sfDir, "documents").count()
+      try graft.engine.Tables.rowCount(spark, sfDir, "documents")
       catch { case _: Throwable => 0L }
     val anchorSkipped = if (docRows > ExactAnchorMaxDocs) {
       System.err.println(

@@ -50,8 +50,8 @@ object IngestScaleBench {
     // batches, same store; the per-batch deltas isolate the layout.
     {
       val base = SigIndex.stageOnce(spark, sfDir)
-      val corpusSigs = spark.read.parquet(s"$base/minhash_sigs")
-      val nDocs = spark.read.parquet(s"$base/band_index")
+      val corpusSigs = graft.engine.Tables.parquet(spark, s"$base/minhash_sigs")
+      val nDocs = graft.engine.Tables.parquet(spark, s"$base/band_index")
         .select(col("doc_id")).distinct().count()
       val batchDocs = graft.engine.Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text")).limit(nBatches * 1000).collect()
@@ -59,7 +59,7 @@ object IngestScaleBench {
           java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T12:00:00Z"))))
         .grouped(1000).toIndexedSeq
       val variants = Seq(
-        "flat" -> (() => spark.read.parquet(s"$base/band_index")),
+        "flat" -> (() => graft.engine.Tables.parquet(spark, s"$base/band_index")),
         "bucketed" -> (() => spark.table(SigIndex.stageBandsBucketed(spark, sfDir))))
       for ((layout, bands) <- variants) {
         val input = MemoryStream[StreamingOps.TimedDoc]
@@ -82,7 +82,7 @@ object IngestScaleBench {
     // ---- ANN ingest (cell assignment) against the stored centroids ----
     {
       val (base, cells) = AnnIndex.stageAuto(spark, sfDir)
-      val centStored = spark.read.parquet(s"$base/ivf_centroids")
+      val centStored = graft.engine.Tables.parquet(spark, s"$base/ivf_centroids")
       val batchVecs = graft.engine.Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding")).limit(nBatches * 5000).collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1)))

@@ -56,7 +56,7 @@ object PipelineDemo {
     val h = build(spark, sfDir, batches, batchSize, outDir)
     h.driveAll()
     h.query.stop()
-    val packed = spark.read.parquet(s"$outDir/packed")
+    val packed = graft.engine.Tables.parquet(spark, s"$outDir/packed")
     println(s"[pipeline-demo] packed sequences across $batches batches: " +
       s"${packed.count()} rows, ${packed.agg(sum(col("seq_tokens"))).head.getLong(0)} tokens → $outDir/packed")
     spark.stop()

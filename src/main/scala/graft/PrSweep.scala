@@ -40,8 +40,8 @@ object PrSweep {
           // iters-sliced baseline: marginal round cost
           val base = SigIndex.stageClusters(spark, sfDir)
           graft.functions.Dedup.pagerankOnEdgeDegForSweep(
-            spark.read.parquet(s"$base/edge_deg"),
-            spark.read.parquet(s"$base/deg"), "doc_id", s.drop(5).toInt, 1000000L)
+            graft.engine.Tables.parquet(spark, s"$base/edge_deg"),
+            graft.engine.Tables.parquet(spark, s"$base/deg"), "doc_id", s.drop(5).toInt, 1000000L)
         case other =>
           sys.error(s"unknown PrSweep variant '$other' — valid: base, slim, base:<iters>")
       }
@@ -75,8 +75,8 @@ object PrSweep {
     */
   def docPagerankStagedSlim(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val base = SigIndex.stageClusters(spark, dir)
-    val deg = spark.read.parquet(s"$base/deg")
-    val edges = spark.read.parquet(s"$base/edge_deg").select(col("src"), col("dst"))
+    val deg = graft.engine.Tables.parquet(spark, s"$base/deg")
+    val edges = graft.engine.Tables.parquet(spark, s"$base/edge_deg").select(col("src"), col("dst"))
     pagerankSlim(edges, deg, "doc_id", 5, 1000000L)
   }
 

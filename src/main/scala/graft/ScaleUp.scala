@@ -134,16 +134,16 @@ object ScaleUp {
     spark.sparkContext.setLogLevel("ERROR")
 
     def replicate(name: String, keys: Seq[String]): Unit = {
-      val df = spark.read.parquet(s"$src/$name.parquet")
+      val df = graft.engine.Tables(spark, src, name)
       val out = df
         .withColumn("__r", explode(sequence(lit(0L), lit(copies - 1L))))
         .select(df.columns.map(c =>
           if (keys.contains(c)) (col(c) * copies + col("__r")).as(c) else col(c)): _*)
       out.write.mode("overwrite").parquet(s"$dst/$name.parquet")
-      println(s"[scaleup] $name: ${df.count()} -> ${spark.read.parquet(s"$dst/$name.parquet").count()} rows")
+      println(s"[scaleup] $name: ${df.count()} -> ${graft.engine.Tables(spark, dst, name).count()} rows")
     }
     def copy(name: String): Unit = {
-      spark.read.parquet(s"$src/$name.parquet")
+      graft.engine.Tables(spark, src, name)
         .write.mode("overwrite").parquet(s"$dst/$name.parquet")
       println(s"[scaleup] $name: copied unscaled (fixed dim)")
     }
@@ -170,7 +170,7 @@ object ScaleUp {
       val alphabets = (0 until copies).map(docAlphabet)
       require(alphabets.distinct.size == copies,
         s"documents: replica alphabet collision at copies=$copies")
-      val df = spark.read.parquet(s"$src/documents.parquet")
+      val df = graft.engine.Tables(spark, src, "documents")
       val out = df
         .withColumn("__r", explode(sequence(lit(0), lit(copies - 1))))
         .select(
@@ -188,7 +188,7 @@ object ScaleUp {
     def replicateEmb(): Unit = {
       require(copies <= 100000,
         s"embeddings: keep the replica budget sane, got copies=$copies")
-      val df = spark.read.parquet(s"$src/embeddings.parquet")
+      val df = graft.engine.Tables(spark, src, "embeddings")
       val out = df
         .withColumn("__r", explode(sequence(lit(0), lit(copies - 1))))
         .select(

@@ -13,50 +13,6 @@ final case class QueryDef(
     build: (SparkSession, String) => DataFrame,
     oracle: Option[String])
 
-/** Loaders for the driver-generated parquet tables (TESTDATA.md). */
-object Tables {
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
-  /** `events.ts` has shipped in two parquet encodings: TIMESTAMP(NANOS),
-    * which Spark 4 refuses to map to TimestampType, and TIMESTAMP(MICROS)
-    * without timezone, which Spark reads as TIMESTAMP_NTZ (rejected by
-    * `unix_micros` and friends). Normalize both to a microsecond
-    * TimestampType here — the single seam every events query reads
-    * through. Nanos are truncated to micros (the same truncation DuckDB
-    * applies); the NTZ cast is value-preserving because the session
-    * timezone is pinned to UTC.
-    *
-    * Session-wide side effect, by design: the nanosAsLong conf stays set,
-    * so OTHER nanos-parquet reads in this session also come back as
-    * LongType instead of erroring. The conf must stay on for this query's
-    * own execution (it is consulted again at scan time), so it cannot be
-    * safely restored here; callers reading foreign nanos parquet should
-    * convert explicitly as done below.
-    */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = apply(spark, dir, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
-  }
-  def lineitem(spark: SparkSession, dir: String): DataFrame   = apply(spark, dir, "lineitem")
-  def orders(spark: SparkSession, dir: String): DataFrame     = apply(spark, dir, "orders")
-  def customer(spark: SparkSession, dir: String): DataFrame   = apply(spark, dir, "customer")
-  def supplier(spark: SparkSession, dir: String): DataFrame   = apply(spark, dir, "supplier")
-  def part(spark: SparkSession, dir: String): DataFrame       = apply(spark, dir, "part")
-  def nation(spark: SparkSession, dir: String): DataFrame     = apply(spark, dir, "nation")
-  def region(spark: SparkSession, dir: String): DataFrame     = apply(spark, dir, "region")
-  def documents(spark: SparkSession, dir: String): DataFrame  = apply(spark, dir, "documents")
-  def embeddings(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "embeddings")
-}
-
 /** SQL text surface: register the sf-dir tables as temp views (plus the
   * engine's custom functions) so `spark.sql("...")` works over the same
   * data the DataFrame operators see. The engine is DataFrame-first, but a
@@ -100,6 +56,10 @@ object GraftSql {
   *    SMJ nodes flip to ShuffledHashJoin, broadcasts unchanged. AQE
   *    still falls back to SMJ where a hash build cannot fit;
   *  - UTC + no UI;
+  *  - `nanosAsLong` on from the start, the value `Tables.events` sets on
+  *    its first read anyway: flipped mid-session, it would change the
+  *    schema memo key of every table opened before it, and each of those
+  *    would pay a second inference job on its next open;
   *  - SPARK_GRAFT_CONF="k=v;k=v" overlay applied LAST, so a config A/B
   *    can override any default above.
   *
@@ -127,6 +87,7 @@ object RunnerSession {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)

@@ -84,12 +84,12 @@ object AnnIndex {
     cent.write.mode("overwrite").parquet(s"$base/ivf_centroids")
     // assignments derive from the STORED centroids so the index is
     // internally consistent even if training lineage were ever to change
-    val centStored = spark.read.parquet(s"$base/ivf_centroids")
+    val centStored = Tables.parquet(spark, s"$base/ivf_centroids")
     writePostings(Similarity.assignCells(emb, centStored, "vec_id", "embedding"),
       s"$base/ivf_postings")
     val (sub, cb) = Similarity.pqTrain(emb, "vec_id", "embedding", NumSub, NumCodes, Dim, Iters)
     cb.write.mode("overwrite").parquet(s"$base/pq_codebook")
-    val cbStored = spark.read.parquet(s"$base/pq_codebook")
+    val cbStored = Tables.parquet(spark, s"$base/pq_codebook")
     Similarity.pqAssign(sub, cbStored, "vec_id")
       .write.mode("overwrite").parquet(s"$base/pq_codes")
     sub.unpersist()
@@ -99,7 +99,7 @@ object AnnIndex {
     val resid = IvfPq.residuals(emb, centStored, "vec_id", "embedding").persist()
     val (rsub, rcb) = Similarity.pqTrain(resid, "vec_id", "rv", NumSub, NumCodes, Dim, Iters)
     rcb.write.mode("overwrite").parquet(s"$base/ivfpq_codebook")
-    val rcbStored = spark.read.parquet(s"$base/ivfpq_codebook")
+    val rcbStored = Tables.parquet(spark, s"$base/ivfpq_codebook")
     Similarity.pqAssign(rsub, rcbStored, "vec_id")
       .join(resid.select(col("vec_id"), col("cell")), Seq("vec_id"))
       .select(col("vec_id"), col("cell").cast("int").as("cell"), col("m"), col("code"))
@@ -133,12 +133,12 @@ object AnnIndex {
     VectorExpressions.register(spark)
     val cent = Similarity.ivfCentroids(emb, "vec_id", "embedding", NumCells, Iters)
     cent.write.mode("overwrite").parquet(s"$base/ivf_centroids")
-    val centStored = spark.read.parquet(s"$base/ivf_centroids")
+    val centStored = Tables.parquet(spark, s"$base/ivf_centroids")
     writePostings(Similarity.assignCells(emb, centStored, "vec_id", "embedding"),
       s"$base/ivf_postings")
     val (sub, cb) = Similarity.pqTrain(emb, "vec_id", "embedding", NumSub, NumCodes, Dim, Iters)
     cb.write.mode("overwrite").parquet(s"$base/pq_codebook")
-    val cbStored = spark.read.parquet(s"$base/pq_codebook")
+    val cbStored = Tables.parquet(spark, s"$base/pq_codebook")
     Similarity.pqAssign(sub, cbStored, "vec_id")
       .write.mode("overwrite").parquet(s"$base/pq_codes")
     sub.unpersist()
@@ -188,10 +188,10 @@ object AnnIndex {
       "_GRAFT_DELTA_OK") { delta =>
       val batch = Tables.embeddings(spark, dir).filter(batchPred)
       VectorExpressions.register(spark)
-      val centStored = spark.read.parquet(s"$base/ivf_centroids")
+      val centStored = Tables.parquet(spark, s"$base/ivf_centroids")
       writePostings(Similarity.assignCells(batch, centStored, "vec_id", "embedding"),
         s"$delta/ivf_postings")
-      val cbStored = spark.read.parquet(s"$base/pq_codebook")
+      val cbStored = Tables.parquet(spark, s"$base/pq_codebook")
       val sub = Similarity.pqSubVectors(batch, "vec_id", "embedding", NumSub, SubDim)
       Similarity.pqAssign(sub, cbStored, "vec_id")
         .write.mode("overwrite").parquet(s"$delta/pq_codes")
@@ -209,8 +209,8 @@ object AnnIndex {
                              batches: Seq[(Column, String)]): DataFrame = {
     val base = stageIncrBase(spark, dir)
     val deltas = batches.map { case (pred, tag) => appendToIndex(spark, dir, pred, tag) }
-    deltas.foldLeft(spark.read.parquet(s"$base/$sub")) { (acc, d) =>
-      acc.unionByName(spark.read.parquet(s"$d/$sub"))
+    deltas.foldLeft(Tables.parquet(spark, s"$base/$sub")) { (acc, d) =>
+      acc.unionByName(Tables.parquet(spark, s"$d/$sub"))
     }
   }
 
@@ -228,7 +228,7 @@ object AnnIndex {
                        batches: Seq[(Column, String)] = defaultBatches): DataFrame = {
     val base = stageIncrBase(spark, dir)
     ivfServe(spark, dir,
-      spark.read.parquet(s"$base/ivf_centroids"),
+      Tables.parquet(spark, s"$base/ivf_centroids"),
       mergedArtifact(spark, dir, "ivf_postings", batches),
       queryPred, k, nprobe)
   }
@@ -242,7 +242,7 @@ object AnnIndex {
                       batches: Seq[(Column, String)] = defaultBatches): DataFrame = {
     val base = stageIncrBase(spark, dir)
     pqServe(spark, dir,
-      spark.read.parquet(s"$base/pq_codebook"),
+      Tables.parquet(spark, s"$base/pq_codebook"),
       mergedArtifact(spark, dir, "pq_codes", batches),
       queryPred, k)
   }
@@ -261,7 +261,7 @@ object AnnIndex {
                            batches: Seq[(Column, String)] = defaultBatches): DataFrame = {
     val base = stageIncrBase(spark, dir)
     VectorExpressions.register(spark)
-    val cent = spark.read.parquet(s"$base/ivf_centroids")
+    val cent = Tables.parquet(spark, s"$base/ivf_centroids")
     val assigned = mergedArtifact(spark, dir, "ivf_postings", batches)
       .withColumn("cell", col("cell").cast("long"))
     // "new" = member of ANY served ingest batch — derived from the same
@@ -283,8 +283,8 @@ object AnnIndex {
                    nprobe: Int = Nprobe): DataFrame = {
     val base = stageOnce(spark, dir)
     ivfServe(spark, dir,
-      spark.read.parquet(s"$base/ivf_centroids"),
-      spark.read.parquet(s"$base/ivf_postings"),
+      Tables.parquet(spark, s"$base/ivf_centroids"),
+      Tables.parquet(spark, s"$base/ivf_postings"),
       queryPred, k, nprobe)
   }
 
@@ -308,8 +308,8 @@ object AnnIndex {
                           k: Int, nprobe: Int = Nprobe): DataFrame = {
     val base = stageOnce(spark, dir)
     VectorExpressions.register(spark)
-    val centroids = spark.read.parquet(s"$base/ivf_centroids")
-    val postings = spark.read.parquet(s"$base/ivf_postings")
+    val centroids = Tables.parquet(spark, s"$base/ivf_centroids")
+    val postings = Tables.parquet(spark, s"$base/ivf_postings")
       .withColumn("cell", col("cell").cast("long"))
     val labels = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
     val cn = Similarity.withNorm(postings, "vec_id", "embedding", passthrough = Seq("cell"))
@@ -395,8 +395,8 @@ object AnnIndex {
   def pqKnnStaged(spark: SparkSession, dir: String, queryPred: Column, k: Int): DataFrame = {
     val base = stageOnce(spark, dir)
     pqServe(spark, dir,
-      spark.read.parquet(s"$base/pq_codebook"),
-      spark.read.parquet(s"$base/pq_codes"),
+      Tables.parquet(spark, s"$base/pq_codebook"),
+      Tables.parquet(spark, s"$base/pq_codes"),
       queryPred, k)
   }
 
@@ -439,8 +439,8 @@ object AnnIndex {
   def pqReconError(spark: SparkSession, dir: String): DataFrame = {
     val base = stageOnce(spark, dir)
     VectorExpressions.register(spark)
-    val cb = spark.read.parquet(s"$base/pq_codebook")
-    val codes = spark.read.parquet(s"$base/pq_codes")
+    val cb = Tables.parquet(spark, s"$base/pq_codebook")
+    val codes = Tables.parquet(spark, s"$base/pq_codes")
     val sub = Similarity.pqSubVectors(
       Tables.embeddings(spark, dir), "vec_id", "embedding", NumSub, SubDim)
     pqMse(sub, codes, cb)
@@ -533,15 +533,15 @@ object AnnIndex {
   def ivfPqReconError(spark: SparkSession, dir: String): DataFrame = {
     val base = stageOnce(spark, dir)
     VectorExpressions.register(spark)
-    val postings = spark.read.parquet(s"$base/ivf_postings")
-    val cent = spark.read.parquet(s"$base/ivf_centroids")
+    val postings = Tables.parquet(spark, s"$base/ivf_postings")
+    val cent = Tables.parquet(spark, s"$base/ivf_centroids")
     val resid = postings.join(broadcast(cent), Seq("cell"))
       .select(col("vec_id"),
         zip_with(col("embedding"), col("cv"),
           (x, y) => x.cast("double") - y.cast("double")).as("rv"))
     val rsub = Similarity.pqSubVectors(resid, "vec_id", "rv", NumSub, SubDim)
-    val rcodes = spark.read.parquet(s"$base/ivfpq_codes")
-    val rcb = spark.read.parquet(s"$base/ivfpq_codebook")
+    val rcodes = Tables.parquet(spark, s"$base/ivfpq_codes")
+    val rcb = Tables.parquet(spark, s"$base/ivfpq_codebook")
     pqMse(rsub, rcodes, rcb)
   }
 
@@ -575,7 +575,7 @@ object AnnIndex {
   def ivfCellStats(spark: SparkSession, dir: String): DataFrame = {
     val base = stageOnce(spark, dir)
     VectorExpressions.register(spark)
-    val postings = spark.read.parquet(s"$base/ivf_postings")
+    val postings = Tables.parquet(spark, s"$base/ivf_postings")
     Similarity.withNorm(postings, "vec_id", "embedding", passthrough = Seq("cell"))
       .groupBy(col("cell").cast("int").as("cell"))
       .agg(count(lit(1)).as("n_vecs"),
@@ -595,9 +595,9 @@ object AnnIndex {
                      nprobe: Int = Nprobe): DataFrame = {
     val base = stageOnce(spark, dir)
     VectorExpressions.register(spark)
-    val centroids = spark.read.parquet(s"$base/ivf_centroids")
-    val rcb = spark.read.parquet(s"$base/ivfpq_codebook")
-    val cand = spark.read.parquet(s"$base/ivfpq_codes")
+    val centroids = Tables.parquet(spark, s"$base/ivf_centroids")
+    val rcb = Tables.parquet(spark, s"$base/ivfpq_codebook")
+    val cand = Tables.parquet(spark, s"$base/ivfpq_codes")
       .select(col("vec_id").as("n_id"), col("cell").cast("long").as("cell"),
         col("m"), col("code"))
     val qn = Similarity.withNorm(
@@ -662,7 +662,7 @@ object AnnIndex {
                maxCellSize: Option[Int] = None): DataFrame = {
     val base = stageOnce(spark, dir)
     VectorExpressions.register(spark)
-    semDedupPairsOf(spark.read.parquet(s"$base/ivf_postings"), threshold, maxCellSize)
+    semDedupPairsOf(Tables.parquet(spark, s"$base/ivf_postings"), threshold, maxCellSize)
   }
 
   /** The within-cell exact-cosine pair scan over any (vec_id, embedding,
@@ -694,19 +694,19 @@ object AnnIndex {
 
   /** [[semDedup]] with corpus-sized cells — the production geometry the
     * staged qkey's scaladoc promises: cells ≈ √n ([[Similarity.ivfCellsFor]],
-    * one metadata-only count() at plan time) bounds candidate work at
-    * Σ|cell|² ≈ n·√n instead of the fixed-16-cell n²/16. Trains inline at
-    * iters = 1 (the inline-twin convention — the oracle unrolls the same
-    * training in SQL); the gate fixtures ship 500 embeddings at both
-    * oracle scales, so the rule lands on ceil(√500) = 23 cells at both
-    * and the oracle pins that constant, exactly like
-    * `dedup_embedding_lsh_auto`'s band geometry.
+    * one job-free footer row count at plan time, [[Tables.rowCount]])
+    * bounds candidate work at Σ|cell|² ≈ n·√n instead of the
+    * fixed-16-cell n²/16. Trains inline at iters = 1 (the inline-twin
+    * convention — the oracle unrolls the same training in SQL); the gate
+    * fixtures ship 500 embeddings at both oracle scales, so the rule
+    * lands on ceil(√500) = 23 cells at both and the oracle pins that
+    * constant, exactly like `dedup_embedding_lsh_auto`'s band geometry.
     */
   def semDedupAuto(spark: SparkSession, dir: String, threshold: Double = 0.4,
                    maxCellSize: Option[Int] = None): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     VectorExpressions.register(spark)
-    val n = emb.count()
+    val n = Tables.rowCount(spark, dir, "embeddings")
     val cells = Similarity.ivfCellsFor(n)
     // sampled Lloyd (mod = 1 at gate scales — see ivfTrainSampleModFor)
     val cent = Similarity.ivfCentroids(
@@ -759,7 +759,7 @@ object AnnIndex {
   def stageAuto(spark: SparkSession, dir: String): (String, Int) = {
     val emb = Tables.embeddings(spark, dir)
     VectorExpressions.register(spark)
-    val n = emb.count()
+    val n = Tables.rowCount(spark, dir, "embeddings")
     val cells = Similarity.ivfCellsFor(n)
     // sampled Lloyd: training cost stays LINEAR in the corpus (the sf10
     // staging point measured the full-corpus √n-cell build super-linear —
@@ -780,7 +780,7 @@ object AnnIndex {
       val cent = Similarity.ivfCentroids(
         Similarity.ivfTrainSlice(emb, "vec_id", mod), "vec_id", "embedding", cells, Iters)
       cent.write.mode("overwrite").parquet(s"$base/ivf_centroids")
-      val centStored = spark.read.parquet(s"$base/ivf_centroids")
+      val centStored = Tables.parquet(spark, s"$base/ivf_centroids")
       if (hier) {
         // the postings write is the ONE action consuming the assignment —
         // release the hier probe's internal persist immediately instead
@@ -809,8 +809,8 @@ object AnnIndex {
                        k: Int): DataFrame = {
     val (base, cells) = stageAuto(spark, dir)
     ivfServe(spark, dir,
-      spark.read.parquet(s"$base/ivf_centroids"),
-      spark.read.parquet(s"$base/ivf_postings"),
+      Tables.parquet(spark, s"$base/ivf_centroids"),
+      Tables.parquet(spark, s"$base/ivf_postings"),
       queryPred, k, Similarity.ivfNprobeFor(cells))
   }
 
@@ -824,7 +824,7 @@ object AnnIndex {
                          maxCellSize: Option[Int] = None): DataFrame = {
     val (base, _) = stageAuto(spark, dir)
     VectorExpressions.register(spark)
-    semDedupPairsOf(spark.read.parquet(s"$base/ivf_postings"), threshold, maxCellSize)
+    semDedupPairsOf(Tables.parquet(spark, s"$base/ivf_postings"), threshold, maxCellSize)
   }
 
   /** DuckDB twin of [[semDedup]]: unrolled IVF training + assignment,

@@ -757,34 +757,37 @@ object ShingleSet {
   // ONE set per JVM, not one per task: 32 concurrent scan tasks each
   // building a private ~130 MB structure put ~4 GB of duplicates on the
   // 8 GB contract heap — measured as a GC collapse (4-core utilization
-  // on 32 cores). The memo keys on the broadcast value's BACKING BUFFER
-  // identity (UnsafeArrayData wrappers are created per access, but the
-  // TorrentBroadcast-cached row's byte[] is one object per JVM), so it
-  // can never confuse two different sets, and a fresh broadcast —
-  // every bench run — rebuilds. Weak/soft refs keep the slot from
-  // pinning a dead set across queries.
-  @volatile private var slotKey: java.lang.ref.WeakReference[AnyRef] = _
-  @volatile private var slotVal: java.lang.ref.SoftReference[ShingleSet] = _
+  // on 32 cores). The memo keys on where the array's bytes live: the
+  // BACKING BUFFER identity (UnsafeArrayData wrappers are created per
+  // access, but the TorrentBroadcast-cached row's byte[] is one object
+  // per JVM) plus the array's offset and length in it — two array
+  // columns of one UnsafeRow share the buffer and differ only there.
+  // A fresh broadcast — every bench run — rebuilds. Weak/soft refs keep
+  // the slot from pinning a dead set across queries; key and set live in
+  // one immutable slot so a reader never pairs a key with another's set.
+  private final class Slot(base: AnyRef, offset: Long, n: Int, set: ShingleSet) {
+    private val baseRef = new java.lang.ref.WeakReference(base)
+    private val setRef = new java.lang.ref.SoftReference(set)
+    def get(b: AnyRef, off: Long, len: Int): ShingleSet =
+      if ((baseRef.get eq b) && offset == off && n == len) setRef.get else null
+  }
+  @volatile private var slot: Slot = _
 
   def setFor(a: ArrayData): ShingleSet = {
-    val key: AnyRef = a match {
-      case u: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData => u.getBaseObject
-      case other => other
+    val (base, offset) = a match {
+      case u: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData =>
+        (u.getBaseObject, u.getBaseOffset)
+      case other => (other, 0L)
     }
-    val k = slotKey
-    if (k != null && (k.get eq key)) {
-      val v = slotVal
-      if (v != null) { val s = v.get; if (s != null) return s }
-    }
+    val n = a.numElements()
+    def cached: ShingleSet = { val s = slot; if (s == null) null else s.get(base, offset, n) }
+    val hit = cached
+    if (hit != null) return hit
     this.synchronized {
-      val k2 = slotKey
-      if (k2 != null && (k2.get eq key)) {
-        val v = slotVal
-        if (v != null) { val s = v.get; if (s != null) return s }
-      }
+      val hit2 = cached
+      if (hit2 != null) return hit2
       val built = fromArrayData(a)
-      slotKey = new java.lang.ref.WeakReference(key)
-      slotVal = new java.lang.ref.SoftReference(built)
+      slot = new Slot(base, offset, n, built)
       built
     }
   }

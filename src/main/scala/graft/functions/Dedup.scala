@@ -1650,7 +1650,7 @@ object Dedup {
     // plan, oracle-identical) at the ≤500-doc gate scales
     QueryDef("dedup_qa_report", (s, dir) => {
       val docs = Tables.documents(s, dir)
-      dedupQaReport(docs, "doc_id", "text", embQaSampleModFor(docs.count()))
+      dedupQaReport(docs, "doc_id", "text", embQaSampleModFor(Tables.rowCount(s, dir, "documents")))
     }, Some(dedupQaReportSql)),
     QueryDef("dedup_embedding", (s, dir) => embeddingNearDups(Tables.embeddings(s, dir), "vec_id", "embedding", 0.4), Some(embeddingNearDupSql)),
     // ORACLE GATE TWIN — do not use at scale. The fixed (32, 4) geometry
@@ -1664,7 +1664,8 @@ object Dedup {
     QueryDef("embedding_dedup_qa",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        embeddingDedupQa(emb, "vec_id", "embedding", 0.4, embQaSampleModFor(emb.count()))
+        embeddingDedupQa(emb, "vec_id", "embedding", 0.4,
+          embQaSampleModFor(Tables.rowCount(s, dir, "embeddings")))
       },
       Some(embeddingDedupQaSql)),
     QueryDef("dedup_incremental",

@@ -77,7 +77,7 @@ object SigIndex {
                              sampleMod: Long = 1L): DataFrame = {
     require(sampleMod >= 1, "storedShingles: sampleMod must be >= 1")
     val base = stageShingles(spark, dir)
-    val raw = spark.read.parquet(s"$base/shingles")
+    val raw = Tables.parquet(spark, s"$base/shingles")
     // The deterministic doc slice ([[Dedup.embQaSampleModFor]] rule)
     // applies BEFORE the re-shard so the shuffle moves only slice rows;
     // mod = 1 leaves the plan filter-free (gate/oracle plans unchanged).
@@ -98,14 +98,14 @@ object SigIndex {
   }
 
   /** Count-derived sample modulus for the SAMPLED exact-family serves:
-    * one metadata-only documents count → the [[Dedup.embQaSampleModFor]]
-    * rule (≈ n/500), so the slice — and therefore the quadratic exact
-    * pair work — is bounded to ~500 docs BY CONSTRUCTION at any corpus
-    * size, and equals 1 (filter-free plan, oracle unchanged) at the
-    * ≤500-doc gates.
+    * one job-free documents row count ([[Tables.rowCount]]) → the
+    * [[Dedup.embQaSampleModFor]] rule (≈ n/500), so the slice — and
+    * therefore the quadratic exact pair work — is bounded to ~500 docs
+    * BY CONSTRUCTION at any corpus size, and equals 1 (filter-free plan,
+    * oracle unchanged) at the ≤500-doc gates.
     */
   private def docSampleMod(spark: SparkSession, dir: String): Long =
-    Dedup.embQaSampleModFor(Tables.documents(spark, dir).count())
+    Dedup.embQaSampleModFor(Tables.rowCount(spark, dir, "documents"))
 
   /** Exact n-gram Jaccard near-dup pairs served from the shingle store —
     * df-cap + inverted-index self-join straight off stored (doc_id, sh)
@@ -204,7 +204,8 @@ object SigIndex {
     // 16-bit clamp; past it the store keys on the PROBED bits — probe
     // itself is a serve-time policy over the same unprobed band rows,
     // but the bit width is part of the directory fingerprint
-    val (bits, probe) = Dedup.lshGeometryFor(emb.count(), targetBucket)
+    val (bits, probe) = Dedup.lshGeometryFor(
+      Tables.rowCount(spark, dir, "embeddings"), targetBucket)
     val base = buildOnce(spark,
         storePath(spark, dir, "vlsh", s"b${numBands}x${bits}_r1"),
         "_GRAFT_VLSH_OK") { base =>
@@ -226,7 +227,7 @@ object SigIndex {
     // the serve probes with exactly the geometry the build keyed the
     // store on — no second count of the live table (see stageEmbLshGeom)
     val (base, bits, probe) = stageEmbLshGeom(spark, dir)
-    val bands = spark.read.parquet(s"$base/bands")
+    val bands = Tables.parquet(spark, s"$base/bands")
     // normalized vectors feed both scoring sides → persist
     val n = Similarity.withNorm(Tables.embeddings(spark, dir), "vec_id", "embedding").persist()
     Dedup.embLshScoreProbed(bands, n, "vec_id", threshold, bits, probe)
@@ -272,9 +273,9 @@ object SigIndex {
     require(queryTerms.nonEmpty, "bm25TopKStaged: empty query-term workload")
     val base = stageBm25(spark, dir)
     TextAnalysis.bm25Rank(
-      spark.read.parquet(s"$base/postings").filter(col("term").isin(queryTerms: _*)),
-      spark.read.parquet(s"$base/doclen"),
-      spark.read.parquet(s"$base/stats"),
+      Tables.parquet(spark, s"$base/postings").filter(col("term").isin(queryTerms: _*)),
+      Tables.parquet(spark, s"$base/doclen"),
+      Tables.parquet(spark, s"$base/stats"),
       "doc_id", k)
   }
 
@@ -292,9 +293,9 @@ object SigIndex {
     require(queryTerms.nonEmpty, "bm25ScoredStatic: empty query-term workload")
     val base = stageBm25(spark, dir)
     TextAnalysis.bm25Scored(
-      spark.read.parquet(s"$base/postings").filter(col("term").isin(queryTerms: _*)),
-      spark.read.parquet(s"$base/doclen"),
-      spark.read.parquet(s"$base/stats"),
+      Tables.parquet(spark, s"$base/postings").filter(col("term").isin(queryTerms: _*)),
+      Tables.parquet(spark, s"$base/doclen"),
+      Tables.parquet(spark, s"$base/stats"),
       "doc_id")
   }
 
@@ -321,7 +322,7 @@ object SigIndex {
   def bpeEncodeStaged(spark: SparkSession, dir: String, merges: Int = 4): DataFrame = {
     val base = stageBpe(spark, dir, merges)
     TextAnalysis.bpeEncodeStatsFromSeg(Tables.documents(spark, dir), "doc_id", "text",
-      spark.read.parquet(s"$base/segmentation"))
+      Tables.parquet(spark, s"$base/segmentation"))
   }
 
   def stageOnce(spark: SparkSession, dir: String): String =
@@ -331,7 +332,7 @@ object SigIndex {
         .write.mode("overwrite").parquet(s"$base/minhash_sigs")
       // bands derive from the STORED signatures so the index is internally
       // consistent even if the signature lineage were ever to change
-      val sigsStored = spark.read.parquet(s"$base/minhash_sigs")
+      val sigsStored = Tables.parquet(spark, s"$base/minhash_sigs")
       Dedup.minhashBands(sigsStored, "doc_id", NumHashes, RowsPerBand)
         .write.mode("overwrite").parquet(s"$base/band_index")
     }
@@ -368,7 +369,7 @@ object SigIndex {
         spark.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(loc)) fs.delete(loc, true)
-      spark.read.parquet(s"${stageOnce(spark, dir)}/band_index")
+      Tables.parquet(spark, s"${stageOnce(spark, dir)}/band_index")
         .write.bucketBy(buckets, "band", "sig").sortBy("band", "sig")
         .mode("overwrite").format("parquet").saveAsTable(tbl)
     }
@@ -384,7 +385,7 @@ object SigIndex {
                          sampleMod: Long = 1L): DataFrame = {
     require(sampleMod >= 1, "minhashPairsStaged: sampleMod must be >= 1")
     val base = stageOnce(spark, dir)
-    val bands = spark.read.parquet(s"$base/band_index")
+    val bands = Tables.parquet(spark, s"$base/band_index")
     // band rows are per-doc, so a doc-slice filter here equals the inline
     // operator's document filter (QA self-bounding); mod = 1 → no filter
     val sliced = if (sampleMod == 1) bands
@@ -400,7 +401,7 @@ object SigIndex {
     */
   def estJaccardStaged(spark: SparkSession, dir: String): DataFrame = {
     val base = stageOnce(spark, dir)
-    val mh = spark.read.parquet(s"$base/minhash_sigs")
+    val mh = Tables.parquet(spark, s"$base/minhash_sigs")
     val pairs = pairsStaged(spark, dir)
     val a = mh.select(col("doc_id").as("doc_a") +:
       (1 to NumHashes).map(j => col(s"mh_$j").as(s"a_$j")): _*)
@@ -446,7 +447,7 @@ object SigIndex {
     buildOnce(spark, clustersBasePath(spark, dir), "_GRAFT_CLUSTERS_OK") { base =>
       minhashPairsStaged(spark, dir)
         .write.mode("overwrite").parquet(s"$base/pairs")
-      val pairs = spark.read.parquet(s"$base/pairs")
+      val pairs = Tables.parquet(spark, s"$base/pairs")
       // r3: the PageRank routing tables join the store — (src, dst, deg)
       // and (src, deg) are pure functions of the pair list, and deriving
       // them per serve (union + degree agg + join over 2·|pairs| rows)
@@ -471,7 +472,7 @@ object SigIndex {
     * map, one level earlier in the dedup chain.
     */
   def pairsStaged(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${stageClusters(spark, dir)}/pairs")
+    Tables.parquet(spark, s"${stageClusters(spark, dir)}/pairs")
 
   /** Near-dup clustering off the store — a READ of the staged cluster
     * map (built once by [[stageClusters]]); no graph computation in the
@@ -480,7 +481,7 @@ object SigIndex {
     * shared unchanged.
     */
   def dedupClustersStaged(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${stageClusters(spark, dir)}/cluster_map")
+    Tables.parquet(spark, s"${stageClusters(spark, dir)}/cluster_map")
 
   /** Duplicate-graph PageRank off the store: the STORED routing tables
     * (`edge_deg` = (src, dst, deg), `deg` = (src, deg) — r3 artifacts,
@@ -498,8 +499,8 @@ object SigIndex {
     // the columnar scan (OS-cached locally; on a cluster the re-reads
     // are storage-tier bytes, the standard iterative-reader trade).
     Dedup.pagerankOnEdgeDeg(
-      spark.read.parquet(s"$base/edge_deg"),
-      spark.read.parquet(s"$base/deg"),
+      Tables.parquet(spark, s"$base/edge_deg"),
+      Tables.parquet(spark, s"$base/deg"),
       "doc_id", 5, 1000000L)
   }
 
@@ -542,8 +543,8 @@ object SigIndex {
     val mhB = Dedup.minhashSignaturesFromText(batch, "doc_id", "text", NumHashes)
       .persist()
     val bandsB = Dedup.minhashBands(mhB, "doc_id", NumHashes, RowsPerBand)
-    val mhEx = spark.read.parquet(s"$base/minhash_sigs").filter(!newPred)
-    val bandsEx = spark.read.parquet(s"$base/band_index").filter(!newPred)
+    val mhEx = Tables.parquet(spark, s"$base/minhash_sigs").filter(!newPred)
+    val bandsEx = Tables.parquet(spark, s"$base/band_index").filter(!newPred)
     Dedup.incrementalMatches(mhB, bandsB, mhEx, bandsEx, "doc_id", threshold,
       NumHashes, batchJoin)
   }
@@ -608,8 +609,8 @@ object SigIndex {
     val base = stageOnce(spark, dir)
     val kept = curateBatchAgainstStore(
       batch,
-      spark.read.parquet(s"$base/minhash_sigs"),
-      spark.read.parquet(s"$base/band_index"),
+      Tables.parquet(spark, s"$base/minhash_sigs"),
+      Tables.parquet(spark, s"$base/band_index"),
       idCol, textCol, threshold)
     Curation.seqPacking(
       kept.withColumn("source", lit("ingest")),

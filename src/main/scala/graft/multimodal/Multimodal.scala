@@ -437,7 +437,7 @@ object Multimodal {
       (s, _) => {
         import org.apache.spark.sql.functions._
         import s.implicits._
-        val raw = s.read.parquet(MediaFixturePath)
+        val raw = graft.engine.Tables.parquet(s, MediaFixturePath)
         val piped = extractFeatures(raw.as[MediaRecord], partitions = 8)
           .toDF()
           .groupBy(col("media_type"))
@@ -461,7 +461,7 @@ object Multimodal {
       "video_frames",
       (s, _) => {
         import s.implicits._
-        sampleFrames(s.read.parquet(MediaFixturePath).as[MediaRecord], stride = 2)
+        sampleFrames(graft.engine.Tables.parquet(s, MediaFixturePath).as[MediaRecord], stride = 2)
       },
       Some(videoFramesSqlFor(2))),
   )

@@ -387,6 +387,33 @@ class CurationSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("ShingleSet.setFor: two array columns of one UnsafeRow get their own sets") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.ShingleSet
+    def arr(xs: String*) = ArrayData.toArrayData(xs.map(UTF8String.fromString).toArray)
+    val proj = UnsafeProjection.create(Array[DataType](ArrayType(StringType), ArrayType(StringType)))
+    // equal lengths: the two arrays differ only in their offset in the row
+    val row = proj(InternalRow(arr("alpha", "beta"), arr("gamma", "delta"))).copy()
+    val (a, b) = (row.getArray(0), row.getArray(1))
+    assert(a.asInstanceOf[UnsafeArrayData].getBaseObject eq
+      b.asInstanceOf[UnsafeArrayData].getBaseObject, "fixture: both arrays must share one buffer")
+    def has(set: ShingleSet, s: String): Boolean = {
+      val bytes = s.getBytes("UTF-8")
+      set.indexOf(bytes, 0, bytes.length) >= 0
+    }
+    val sa = ShingleSet.setFor(a)
+    val sb = ShingleSet.setFor(b)
+    assert(has(sa, "alpha") && has(sa, "beta") && !has(sa, "gamma"))
+    assert(has(sb, "gamma") && has(sb, "delta") && !has(sb, "alpha"),
+      "the second column must not be served the first column's set")
+    // a fresh wrapper over the same bytes still hits the memo
+    assert(ShingleSet.setFor(row.getArray(1)) eq sb)
+  }
+
   test("MinShingleMd5 expression equals the explode+min+left-join composition") {
     import spark.implicits._
     val edge = Seq(
