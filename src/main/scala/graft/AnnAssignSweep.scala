@@ -39,6 +39,7 @@ object AnnAssignSweep {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.engine.CodegenCache.Confs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -33,6 +33,7 @@ object LshProbeSweep {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.engine.CodegenCache.Confs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

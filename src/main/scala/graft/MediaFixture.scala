@@ -20,6 +20,7 @@ object MediaFixture {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.engine.CodegenCache.Confs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.multimodal.Multimodal.syntheticMedia(spark, 300)

@@ -32,6 +32,39 @@ object GraftSql {
   }
 }
 
+/** The confs that let Spark's generated-class cache hold graft's working
+  * set, set by every session builder graft has. Spark compiles each
+  * generated class with Janino (~11 ms a class) and keeps it in one LRU per
+  * JVM, keyed on the source text. A class evicted or renamed is compiled
+  * again, and the new class then runs in the interpreter until the JIT
+  * warms it again.
+  *  - `spark.sql.codegen.cache.maxEntries` = [[MaxEntries]]. The default
+  *    holds 100 classes. At sf0.01 the benchmark's 21 essentials keys
+  *    generate ~200 and the full registry ~2,000 a pass, so a runner
+  *    cycling through its queries evicted most classes before their next
+  *    use. 4096 is about twice the registry's measured working set. The conf is static:
+  *    `CodeGenerator$` reads it once, when the JVM first generates code, so
+  *    it must be on the builder. A later `spark.conf.set` is silently
+  *    ignored, and a second session in the same JVM shares the first one's
+  *    cache.
+  *  - `spark.sql.codegen.useIdInClassName` = false. Spark otherwise names a
+  *    whole-stage class after its codegen stage id. Under adaptive
+  *    execution the ids are handed out as query stages are planned, in an
+  *    order that depends on which stages finish first, so the same
+  *    pipeline came back under another id, hence another source text and
+  *    another compile. With the large cache alone a second registry pass
+  *    at sf0.01 still compiled 60 classes, with this conf too 4. The id
+  *    stays in the plan and in a comment of the generated source, which is
+  *    not part of the cache key.
+  */
+object CodegenCache {
+  val MaxEntries = 4096L
+
+  val Confs: Map[String, Any] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> MaxEntries,
+    "spark.sql.codegen.useIdInClassName" -> false)
+}
+
 /** ONE session builder for every artifact-producing runner (Bench,
   * Verify, Explain, StageBench, IngestScaleBench): the round-14 verdict
   * found the bench executing `preferSortMergeJoin=false` while the plan
@@ -56,6 +89,7 @@ object GraftSql {
   *    SMJ nodes flip to ShuffledHashJoin, broadcasts unchanged. AQE
   *    still falls back to SMJ where a hash build cannot fit;
   *  - UTC + no UI;
+  *  - Spark's generated-class cache kept effective by [[CodegenCache]];
   *  - `nanosAsLong` on from the start, the value `Tables.events` sets on
   *    its first read anyway: flipped mid-session, it would change the
   *    schema memo key of every table opened before it, and each of those
@@ -88,6 +122,7 @@ object RunnerSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(CodegenCache.Confs)
     val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
@@ -107,6 +142,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(CodegenCache.Confs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression,
+  UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, StringType}
@@ -608,13 +609,13 @@ object WideBloomPositions {
   * shingles whose every [[WideBloomHash]] probe position is set in the
   * packed bitset `words` — [[BloomFlaggedShingles]] at right-sized
   * geometry. `words` is the broadcast one-row bitset column; because it
-  * can be half a million longs, the long[] is extracted ONCE per task
-  * (lazy codegen/instance cache keyed on first evaluation — the column
-  * is constant, so caching by value is sound) instead of per row. Null
+  * can be half a million longs, the long[] is extracted once per task
+  * (`constantArray`, see [[ArrayMemo]]) instead of per row. Null
   * for texts shorter than `width`; empty array for no flagged shingle.
   */
 case class WideBloomFlaggedShingles(left: Expression, right: Expression,
-                                    width: Int, stride: Int, hashes: Int)
+                                    width: Int, stride: Int, hashes: Int,
+                                    constantArray: Boolean = false)
     extends BinaryExpression {
   require(width >= 1 && stride >= 1 && hashes >= 1 && hashes <= 8,
     "wide_bloom_flagged_shingles: width/stride >= 1, 1 <= hashes <= 8")
@@ -628,22 +629,25 @@ case class WideBloomFlaggedShingles(left: Expression, right: Expression,
   override def nullable: Boolean = true
   override def prettyName: String = "wide_bloom_flagged_shingles"
 
-  @transient private var cachedWords: Array[Long] = _
+  // the flag changes how the argument is cached, not the result
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right, width, stride, hashes)
 
-  override def nullSafeEval(text: Any, words: Any): Any = {
-    if (cachedWords == null)
-      cachedWords = words.asInstanceOf[ArrayData].toLongArray()
+  /** `words` is the same on every row of a task: flagged, or a literal. */
+  def constantArg: Boolean = constantArray || right.foldable
+
+  @transient private lazy val words = new ArrayMemo(WideBloomFlaggedShingles.decode, constantArg)
+
+  override def nullSafeEval(text: Any, w: Any): Any =
     WideBloomFlaggedShingles.compute(text.asInstanceOf[UTF8String],
-      cachedWords, width, stride, hashes)
-  }
+      words(w.asInstanceOf[ArrayData]).asInstanceOf[Array[Long]], width, stride, hashes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cache = ctx.addMutableState("long[]", "wideBloomWords")
+    val memo = ArrayMemo.state(ctx, "wideBloomWords", WideBloomFlaggedShingles.decode, constantArg)
     val res = ctx.freshName("wbfs")
     nullSafeCodeGen(ctx, ev, (t, w) =>
-      s"""if ($cache == null) { $cache = $w.toLongArray(); }
-         |org.apache.spark.sql.catalyst.util.ArrayData $res =
-         |  graft.functions.WideBloomFlaggedShingles.compute($t, $cache, $width, $stride, $hashes);
+      s"""org.apache.spark.sql.catalyst.util.ArrayData $res =
+         |  graft.functions.WideBloomFlaggedShingles.compute($t, (long[]) $memo.apply($w),
+         |    $width, $stride, $hashes);
          |if ($res == null) { ${ev.isNull} = true; } else { ${ev.value} = $res; }
          |""".stripMargin)
   }
@@ -653,6 +657,8 @@ case class WideBloomFlaggedShingles(left: Expression, right: Expression,
 }
 
 object WideBloomFlaggedShingles {
+  val decode: ArrayData => AnyRef = _.toLongArray()
+
   /** Shared by eval and codegen. Null for texts shorter than `width`.
     * `w.length * 64` must be a power of two (the builder guarantees it).
     */
@@ -679,6 +685,82 @@ object WideBloomFlaggedShingles {
     if (!any) null
     else if (set == null) new GenericArrayData(Array.empty[Any])
     else new GenericArrayData(set.toArray.asInstanceOf[Array[AnyRef]])
+  }
+}
+
+/** One value decoded from an array argument, kept while the argument
+  * holds the same array, for expressions whose array argument is costly to
+  * decode and usually the same on every row. How "the same array" is told:
+  *  - `constantArray` (the argument is a literal, or the caller promises
+  *    one value per task, as graft's own callers do with a broadcast
+  *    one-row cross join): by where the bytes live, i.e. the backing
+  *    object (an `UnsafeArrayData`'s buffer, otherwise the `ArrayData`
+  *    itself), the offset in it and the element count, as
+  *    [[ShingleSet.setFor]] keys its JVM-wide set. O(1) a row. A caller
+  *    that promises it for a row-varying column gets stale results.
+  *  - otherwise: by the bytes themselves, compared with a copy of the last
+  *    decoded `UnsafeArrayData` (any other array is decoded again). A
+  *    row-varying column can arrive in ONE reused buffer at one offset (a
+  *    shuffle reader, an unsafe projection), so where the bytes live does
+  *    not tell its rows apart. O(array bytes) a row, less than a decode.
+  * The bytes compare is too slow for graft's callers: their array grows
+  * with the corpus and is compared once per row. Forced on them at sf1
+  * (BASELINE.md, "Constant array arguments"), `contamination_check` took
+  * 15.7 s instead of 2.6 s and the PQ keys 19-49% longer.
+  * One instance per expression instance or generated class, so per task
+  * and never shared between threads.
+  */
+final class ArrayMemo(decode: ArrayData => AnyRef, constantArray: Boolean) {
+  private var value: AnyRef = _
+  private var base: AnyRef = _
+  private var offset = 0L
+  private var n = -1
+  private var bytes: Array[Byte] = _
+
+  def apply(a: ArrayData): AnyRef = {
+    if (value == null || !holds(a)) {
+      value = decode(a)
+      if (constantArray) {
+        base = ArrayMemo.base(a)
+        offset = ArrayMemo.offset(a)
+        n = a.numElements()
+      } else bytes = a match {
+        case u: UnsafeArrayData => u.copy().getBaseObject.asInstanceOf[Array[Byte]]
+        case _ => null
+      }
+    }
+    value
+  }
+
+  private def holds(a: ArrayData): Boolean =
+    if (constantArray)
+      (ArrayMemo.base(a) eq base) && ArrayMemo.offset(a) == offset && a.numElements() == n
+    else a match {
+      case u: UnsafeArrayData =>
+        bytes != null && u.getSizeInBytes == bytes.length &&
+          org.apache.spark.unsafe.array.ByteArrayMethods.arrayEquals(u.getBaseObject,
+            u.getBaseOffset, bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, bytes.length)
+      case _ => false
+    }
+}
+
+object ArrayMemo {
+  def base(a: ArrayData): AnyRef = a match {
+    case u: UnsafeArrayData => u.getBaseObject
+    case other => other
+  }
+
+  def offset(a: ArrayData): Long = a match {
+    case u: UnsafeArrayData => u.getBaseOffset
+    case _ => 0L
+  }
+
+  /** A generated class's memo over `decode`; returns the field name. */
+  def state(ctx: CodegenContext, name: String, decode: ArrayData => AnyRef,
+            constantArray: Boolean): String = {
+    val f = ctx.addReferenceObj(name + "Decode", decode, "scala.Function1")
+    ctx.addMutableState("graft.functions.ArrayMemo", name,
+      v => s"$v = new graft.functions.ArrayMemo($f, $constantArray);")
   }
 }
 
@@ -774,11 +856,8 @@ object ShingleSet {
   @volatile private var slot: Slot = _
 
   def setFor(a: ArrayData): ShingleSet = {
-    val (base, offset) = a match {
-      case u: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData =>
-        (u.getBaseObject, u.getBaseOffset)
-      case other => (other, 0L)
-    }
+    val base = ArrayMemo.base(a)
+    val offset = ArrayMemo.offset(a)
     val n = a.numElements()
     def cached: ShingleSet = { val s = slot; if (s == null) null else s.get(base, offset, n) }
     val hit = cached
@@ -804,8 +883,8 @@ object ShingleSet {
   * The benchmark set arrives as a broadcast one-row `array<string>`
   * column — constant-size relative to the corpus, the same scale
   * contract as [[Curation.contaminationBloom]]'s bitset but EXACT — and
-  * is compiled into a [[ShingleSet]] once per task (lazy cache; the
-  * column is constant, so caching by value is sound).
+  * is compiled into a [[ShingleSet]] once per task (`constantArray`, see
+  * [[ArrayMemo]]).
   *
   * Bit-parity with the join formulation: the count equals
   * |distinct-in-doc shingles ∩ bench set| = the per-doc row count of
@@ -814,7 +893,8 @@ object ShingleSet {
   * drop, matching the inner join's absent rows.
   */
 case class SharedShingleCount(left: Expression, right: Expression,
-                              width: Int, stride: Int) extends BinaryExpression {
+                              width: Int, stride: Int, constantArray: Boolean = false)
+    extends BinaryExpression {
   require(width >= 1 && stride >= 1, "shared_shingle_count: width/stride >= 1")
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
@@ -826,20 +906,26 @@ case class SharedShingleCount(left: Expression, right: Expression,
   override def nullable: Boolean = true
   override def prettyName: String = "shared_shingle_count"
 
-  @transient private var cachedSet: ShingleSet = _
+  // the flag changes how the argument is cached, not the result
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right, width, stride)
 
-  override def nullSafeEval(text: Any, shingles: Any): Any = {
-    if (cachedSet == null)
-      cachedSet = ShingleSet.setFor(shingles.asInstanceOf[ArrayData])
-    SharedShingleCount.compute(text.asInstanceOf[UTF8String], cachedSet, width, stride)
-  }
+  /** `right` is the same on every row of a task: flagged, or a literal. */
+  def constantArg: Boolean = constantArray || right.foldable
+
+  @transient private lazy val sets =
+    new ArrayMemo(SharedShingleCount.decoder(constantArg), constantArg)
+
+  override def nullSafeEval(text: Any, shingles: Any): Any =
+    SharedShingleCount.compute(text.asInstanceOf[UTF8String],
+      sets(shingles.asInstanceOf[ArrayData]).asInstanceOf[ShingleSet], width, stride)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cache = ctx.addMutableState("graft.functions.ShingleSet", "benchShingleSet")
+    val memo = ArrayMemo.state(ctx, "benchShingleSet",
+      SharedShingleCount.decoder(constantArg), constantArg)
     val res = ctx.freshName("ssc")
     nullSafeCodeGen(ctx, ev, (t, w) =>
-      s"""if ($cache == null) { $cache = graft.functions.ShingleSet.setFor($w); }
-         |Long $res = graft.functions.SharedShingleCount.compute($t, $cache, $width, $stride);
+      s"""Long $res = graft.functions.SharedShingleCount.compute($t,
+         |  (graft.functions.ShingleSet) $memo.apply($w), $width, $stride);
          |if ($res == null) { ${ev.isNull} = true; } else { ${ev.value} = $res.longValue(); }
          |""".stripMargin)
   }
@@ -849,6 +935,12 @@ case class SharedShingleCount(left: Expression, right: Expression,
 }
 
 object SharedShingleCount {
+  /** A constant array shares [[ShingleSet.setFor]]'s one set per JVM,
+    * which is keyed on where the bytes live; any other is built afresh.
+    */
+  def decoder(constantArray: Boolean): ArrayData => AnyRef =
+    if (constantArray) ShingleSet.setFor else ShingleSet.fromArrayData
+
   /** Shared by eval and codegen. Null for texts shorter than `width`;
     * boxed so codegen can distinguish null from 0.
     */

@@ -993,7 +993,8 @@ object Similarity {
       .agg(sort_array(collect_list(struct(col("m"), col("code"), col("cv")))).as("cbs"))
     sub.crossJoin(broadcast(cbRow))
       .select(col(idCol), col("m"),
-        VectorExpressions.pqAssignCode(col("sv"), col("m").cast("int"), col("cbs")).as("code"))
+        VectorExpressions.pqAssignCode(col("sv"), col("m").cast("int"), col("cbs"),
+          constantArray = true).as("code"))
   }
 
   /** Product quantization — the memory-side ANN scale path past scalar

@@ -1517,7 +1517,7 @@ object TextAnalysis {
         .crossJoin(broadcast(benchArr))
         .select(col(idCol),
           VectorExpressions.sharedShingleCount(
-            col(textCol), col("bench_sh"), width, stride).as("n_shared"))
+            col(textCol), col("bench_sh"), width, stride, constantArray = true).as("n_shared"))
         .filter(col("n_shared") > 0)
     } else {
       val ideal = math.ceil(n.toDouble * k / math.log(2.0)).toLong
@@ -1546,7 +1546,8 @@ object TextAnalysis {
             .crossJoin(broadcast(bw))
             .select(col(idCol),
               explode(VectorExpressions.wideBloomFlaggedShingles(
-                col(textCol), col("bloom_words"), width, stride, k)).as("sh"))
+                col(textCol), col("bloom_words"), width, stride, k,
+                constantArray = true)).as("sh"))
         }
       flagged.join(bench, Seq("sh"))
         .groupBy(col(idCol)).agg(count(lit(1)).as("n_shared"))

@@ -188,7 +188,8 @@ object VectorSignBands {
   * always has ≥1 code (seeds slice all of them), so this is unreachable
   * in practice and would fail the oracle gate loudly, not silently.
   */
-case class PqAssignCode(first: Expression, second: Expression, third: Expression)
+case class PqAssignCode(first: Expression, second: Expression, third: Expression,
+                        constantArray: Boolean = false)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     (first.dataType, second.dataType, third.dataType) match {
@@ -213,21 +214,25 @@ case class PqAssignCode(first: Expression, second: Expression, third: Expression
       .asInstanceOf[org.apache.spark.sql.types.StructType]
       .fields(2).dataType.asInstanceOf[ArrayType].elementType == DoubleType
 
-  @transient private var cachedCb: PqCodebook = _
+  // the flag changes how the argument is cached, not the result
+  override protected def stringArgs: Iterator[Any] = Iterator(first, second, third)
 
-  override def nullSafeEval(sv: Any, m: Any, cbs: Any): Any = {
-    if (cachedCb == null)
-      cachedCb = PqCodebook.fromArrayData(cbs.asInstanceOf[ArrayData], cvDouble)
+  /** `third` is the same on every row of a task: flagged, or a literal. */
+  def constantArg: Boolean = constantArray || third.foldable
+
+  @transient private lazy val codebooks =
+    new ArrayMemo(PqCodebook.decoder(cvDouble), constantArg)
+
+  override def nullSafeEval(sv: Any, m: Any, cbs: Any): Any =
     PqAssignCode.compute(sv.asInstanceOf[ArrayData], m.asInstanceOf[Int],
-      cachedCb, svDouble)
-  }
+      codebooks(cbs.asInstanceOf[ArrayData]).asInstanceOf[PqCodebook], svDouble)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cache = ctx.addMutableState("graft.functions.PqCodebook", "pqCodebook")
+    val memo = ArrayMemo.state(ctx, "pqCodebook", PqCodebook.decoder(cvDouble), constantArg)
     val res = ctx.freshName("pqc")
     nullSafeCodeGen(ctx, ev, (sv, m, cbs) =>
-      s"""if ($cache == null) { $cache = graft.functions.PqCodebook.fromArrayData($cbs, $cvDouble); }
-         |Integer $res = graft.functions.PqAssignCode.compute($sv, $m, $cache, $svDouble);
+      s"""Integer $res = graft.functions.PqAssignCode.compute($sv, $m,
+         |  (graft.functions.PqCodebook) $memo.apply($cbs), $svDouble);
          |if ($res == null) { ${ev.isNull} = true; } else { ${ev.value} = $res.intValue(); }
          |""".stripMargin)
   }
@@ -237,7 +242,8 @@ case class PqAssignCode(first: Expression, second: Expression, third: Expression
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
-/** The broadcast codebook decoded ONCE PER TASK into primitive arrays —
+/** The broadcast codebook decoded once per task (`constantArray`, see
+  * [[ArrayMemo]]) into primitive arrays —
   * r21: the per-row form walked all `numSub·numCodes` codebook structs
   * through `ArrayData.getStruct`/`getArray` wrapper allocations for
   * every (vector, subspace) row (128 allocations/row × 16 M rows at
@@ -251,6 +257,8 @@ final class PqCodebook(val ms: Array[Int], val codes: Array[Int],
                        val offs: Array[Int], val vals: Array[Double])
 
 object PqCodebook {
+  def decoder(cvDouble: Boolean): ArrayData => AnyRef = fromArrayData(_, cvDouble)
+
   def fromArrayData(cbs: ArrayData, cvDouble: Boolean): PqCodebook = {
     val n = cbs.numElements()
     val ms = new Array[Int](n)
@@ -432,10 +440,10 @@ object VectorExpressions {
     val pac = org.apache.spark.sql.catalyst.FunctionIdentifier("pq_assign_code")
     if (!spark.sessionState.functionRegistry.functionExists(pac)) {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "pq_assign_code", exprs => {
-          require(exprs.length == 3, "pq_assign_code(sv, m, cbs) takes 3 arguments")
-          PqAssignCode(exprs(0), exprs(1), exprs(2))
-        }, "built-in")
+        "pq_assign_code", exprs =>
+          PqAssignCode(exprs(0), exprs(1), exprs(2),
+            constantArrayArg(exprs, 3, "pq_assign_code(sv, m, cbs[, constant_array])")),
+        "built-in")
     }
     val bgc = org.apache.spark.sql.catalyst.FunctionIdentifier("bigram_counts")
     if (!spark.sessionState.functionRegistry.functionExists(bgc)) {
@@ -509,19 +517,22 @@ object VectorExpressions {
     if (!spark.sessionState.functionRegistry.functionExists(ssc)) {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "shared_shingle_count", exprs => {
-          require(exprs.length == 4, "shared_shingle_count(text, shingles, width, stride) takes 4 arguments")
+          val constant = constantArrayArg(exprs, 4,
+            "shared_shingle_count(text, shingles, width, stride[, constant_array])")
           val sig = "shared_shingle_count geometry"
-          SharedShingleCount(exprs(0), exprs(1), intLit(exprs(2), sig), intLit(exprs(3), sig))
+          SharedShingleCount(exprs(0), exprs(1), intLit(exprs(2), sig), intLit(exprs(3), sig),
+            constant)
         }, "built-in")
     }
     val wbf = org.apache.spark.sql.catalyst.FunctionIdentifier("wide_bloom_flagged_shingles")
     if (!spark.sessionState.functionRegistry.functionExists(wbf)) {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "wide_bloom_flagged_shingles", exprs => {
-          require(exprs.length == 5, "wide_bloom_flagged_shingles(text, words, width, stride, hashes) takes 5 arguments")
+          val constant = constantArrayArg(exprs, 5,
+            "wide_bloom_flagged_shingles(text, words, width, stride, hashes[, constant_array])")
           val sig = "wide_bloom_flagged_shingles geometry"
           WideBloomFlaggedShingles(exprs(0), exprs(1), intLit(exprs(2), sig),
-            intLit(exprs(3), sig), intLit(exprs(4), sig))
+            intLit(exprs(3), sig), intLit(exprs(4), sig), constant)
         }, "built-in")
     }
   }
@@ -564,23 +575,31 @@ object VectorExpressions {
     org.apache.spark.sql.functions.call_function("json_fast_long",
       json, org.apache.spark.sql.functions.lit(field))
 
-  /** Column-API handle for [[SharedShingleCount]] (see [[register]]). */
-  def sharedShingleCount(text: Column, shingles: Column, width: Int, stride: Int): Column =
+  /** Column-API handle for [[SharedShingleCount]] (see [[register]]).
+    * `constantArray`: `shingles` is the same on every row of a task
+    * ([[ArrayMemo]]).
+    */
+  def sharedShingleCount(text: Column, shingles: Column, width: Int, stride: Int,
+                         constantArray: Boolean): Column =
     org.apache.spark.sql.functions.call_function("shared_shingle_count",
       text, shingles, org.apache.spark.sql.functions.lit(width),
-      org.apache.spark.sql.functions.lit(stride))
+      org.apache.spark.sql.functions.lit(stride), org.apache.spark.sql.functions.lit(constantArray))
 
   /** Column-API handle for [[WideBloomPositions]] (see [[register]]). */
   def wideBloomPositions(sh: Column, hashes: Int, bits: Int): Column =
     org.apache.spark.sql.functions.call_function("wide_bloom_positions",
       sh, org.apache.spark.sql.functions.lit(hashes), org.apache.spark.sql.functions.lit(bits))
 
-  /** Column-API handle for [[WideBloomFlaggedShingles]] (see [[register]]). */
+  /** Column-API handle for [[WideBloomFlaggedShingles]] (see [[register]]).
+    * `constantArray`: `bloomWords` is the same on every row of a task
+    * ([[ArrayMemo]]).
+    */
   def wideBloomFlaggedShingles(text: Column, bloomWords: Column, width: Int,
-                               stride: Int, hashes: Int): Column =
+                               stride: Int, hashes: Int, constantArray: Boolean): Column =
     org.apache.spark.sql.functions.call_function("wide_bloom_flagged_shingles",
       text, bloomWords, org.apache.spark.sql.functions.lit(width),
-      org.apache.spark.sql.functions.lit(stride), org.apache.spark.sql.functions.lit(hashes))
+      org.apache.spark.sql.functions.lit(stride), org.apache.spark.sql.functions.lit(hashes),
+      org.apache.spark.sql.functions.lit(constantArray))
 
   /** Column-API handle for [[BigramCounts]] (see [[register]]). */
   def bigramCounts(text: Column): Column =
@@ -604,9 +623,13 @@ object VectorExpressions {
     org.apache.spark.sql.functions.call_function("distinct_shingles",
       text, org.apache.spark.sql.functions.lit(width), org.apache.spark.sql.functions.lit(stride))
 
-  /** Column-API handle for [[PqAssignCode]] (see [[register]]). */
-  def pqAssignCode(sv: Column, m: Column, cbs: Column): Column =
-    org.apache.spark.sql.functions.call_function("pq_assign_code", sv, m, cbs)
+  /** Column-API handle for [[PqAssignCode]] (see [[register]]).
+    * `constantArray`: `cbs` is the same on every row of a task
+    * ([[ArrayMemo]]).
+    */
+  def pqAssignCode(sv: Column, m: Column, cbs: Column, constantArray: Boolean): Column =
+    org.apache.spark.sql.functions.call_function("pq_assign_code", sv, m, cbs,
+      org.apache.spark.sql.functions.lit(constantArray))
 
   /** Column-API handle for [[BloomFlaggedShingles]] (see [[register]]). */
   def bloomFlaggedShingles(text: Column, bloomWords: Column, width: Int, stride: Int, hashes: Int): Column =
@@ -630,6 +653,19 @@ object VectorExpressions {
       case Literal(k: Int, _) => k
       case other => throw new IllegalArgumentException(s"$sig: must be an int literal, got $other")
     }
+  }
+
+  /** The optional trailing `constant_array` boolean literal after `n`
+    * arguments ([[ArrayMemo]]); false when absent.
+    */
+  private def constantArrayArg(exprs: Seq[Expression], n: Int, sig: String): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    require(exprs.length == n || exprs.length == n + 1, s"$sig takes $n or ${n + 1} arguments")
+    exprs.length > n && (exprs(n) match {
+      case Literal(b: Boolean, _) => b
+      case other => throw new IllegalArgumentException(
+        s"$sig: constant_array must be a boolean literal, got $other")
+    })
   }
 
   /** The last of `n` args must be an int literal (probe-count geometry is

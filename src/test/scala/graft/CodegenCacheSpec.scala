@@ -1,0 +1,93 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.metrics.source.CodegenMetrics
+
+import graft.engine.{CodegenCache, Scoped}
+import graft.functions.SigIndex
+
+/** Spark's generated-class cache must hold graft's working set: every
+  * session builder applies [[CodegenCache]]'s confs, and a query run again
+  * in the same JVM reuses its compiled classes instead of compiling them
+  * with Janino once more.
+  */
+class CodegenCacheSpec extends SparkSpec {
+
+  private def source(path: String): String =
+    new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
+
+  /** The keys the benchmark's `essentials` workload cycles through. */
+  private val essentials: Seq[String] = {
+    val batch = source("graftbench/src/graftbench/Batch.scala")
+    val list = "val Keys: Seq\\[String\\] = Seq\\(([^)]*)\\)".r.findFirstMatchIn(batch)
+      .getOrElse(fail("no Keys list in Batch.scala")).group(1)
+    "\"([a-z0-9_]+)\"".r.findAllMatchIn(list).map(_.group(1)).toSeq
+  }
+
+  /** The smallest sf dir TESTDATA.md documents. */
+  private def smallest: String = {
+    val doc = source("TESTDATA.md")
+    "`([^`]*/sf[0-9.]+)/?`".r.findAllMatchIn(doc).map(_.group(1)).toSeq
+      .find(d => new java.io.File(d).isDirectory)
+      .getOrElse(cancel("no sf dir of TESTDATA.md is present"))
+  }
+
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("every session builder applies the codegen confs of the one constant") {
+    CodegenCache.Confs.foreach { case (k, v) =>
+      assert(spark.sparkContext.getConf.get(k) === v.toString, k)
+    }
+    val sources = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      Files.walk(Paths.get(root)).toArray.toSeq.map(_.toString).filter(_.endsWith(".scala"))
+    }
+    // every builder: RunnerSession.build, GraftSession.local, SparkSpec and the dev mains
+    val builders = sources.flatMap { p =>
+      "(?s)SparkSession\\.builder\\(\\).*?getOrCreate\\(\\)".r.findAllIn(source(p)).map(p -> _)
+    }
+    assert(builders.map(_._1).toSet.contains("src/test/scala/graft/SparkSpec.scala"))
+    assert(builders.count(_._1 == "src/main/scala/graft/engine/Core.scala") === 2)
+    builders.foreach { case (p, b) =>
+      assert("\\.config\\((graft\\.engine\\.)?CodegenCache\\.Confs\\)".r.findFirstIn(b).nonEmpty, s"$p: $b")
+    }
+    // each conf key is spelled out once, in the constant
+    CodegenCache.Confs.keys.foreach { k =>
+      assert(sources.filter(p => source(p).contains("\"" + k + "\"")) ===
+        Seq("src/main/scala/graft/engine/Core.scala"), k)
+    }
+  }
+
+  test("the compilation counter moves when a query needs a new class") {
+    val c0 = compiles
+    spark.range(3).selectExpr(s"id + ${System.nanoTime()}L AS v").collect()
+    assert(compiles > c0)
+  }
+
+  test("a pipeline compiled under one codegen stage id is reused under another") {
+    val salt = System.nanoTime()
+    val a = spark.range(100).selectExpr(s"id * 3 + ${salt}L AS v").filter("v % 7 = 1")
+    val x = spark.range(50).selectExpr(s"id - ${salt}L AS v")
+    a.collect()
+    x.collect()
+    val c0 = compiles
+    x.union(a).collect() // stage ids 1 and 2; `a` ran alone as stage 1
+    assert(compiles === c0)
+  }
+
+  test("a second pass over the essentials keys compiles no class") {
+    assert(essentials.size === 21)
+    val dir = smallest
+    val defs = SparkEntry.queries
+    SigIndex.stageClusters(spark, dir)
+    def pass(): Seq[(String, Long)] = essentials.map { k =>
+      val c0 = compiles
+      defs(k)(spark, dir).write.format("noop").mode("overwrite").save()
+      Scoped.releaseAll(spark)
+      k -> (compiles - c0)
+    }
+    pass()
+    val again = pass().filter(_._2 > 0)
+    assert(again.isEmpty, s"classes compiled again on the second pass: $again")
+  }
+}
