@@ -39,7 +39,7 @@ object AnnAssignSweep {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(graft.engine.CodegenCache.Confs)
+      .config(graft.engine.SessionConfs.All)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

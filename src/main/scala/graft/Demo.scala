@@ -32,7 +32,7 @@ object Demo {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(graft.engine.CodegenCache.Confs)
+      .config(graft.engine.SessionConfs.All)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val q = start(spark, mode)

@@ -28,7 +28,7 @@ object LshGeometrySweep {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(graft.engine.CodegenCache.Confs)
+      .config(graft.engine.SessionConfs.All)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val emb = graft.engine.Tables.embeddings(spark, sfDir)

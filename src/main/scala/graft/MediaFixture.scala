@@ -20,7 +20,7 @@ object MediaFixture {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(graft.engine.CodegenCache.Confs)
+      .config(graft.engine.SessionConfs.All)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.multimodal.Multimodal.syntheticMedia(spark, 300)

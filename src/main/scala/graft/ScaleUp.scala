@@ -130,7 +130,7 @@ object ScaleUp {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(graft.engine.CodegenCache.Confs)
+      .config(graft.engine.SessionConfs.All)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -32,15 +32,17 @@ object GraftSql {
   }
 }
 
-/** The confs that let Spark's generated-class cache hold graft's working
-  * set, set by every session builder graft has. Spark compiles each
-  * generated class with Janino (~11 ms a class) and keeps it in one LRU per
-  * JVM, keyed on the source text. A class evicted or renamed is compiled
-  * again, and the new class then runs in the interpreter until the JIT
-  * warms it again.
-  *  - `spark.sql.codegen.cache.maxEntries` = [[MaxEntries]]. The default
-  *    holds 100 classes. At sf0.01 the benchmark's 21 essentials keys
-  *    generate ~200 and the full registry ~2,000 a pass, so a runner
+/** The confs every session builder graft has applies, in one place so no
+  * builder can miss one. Each is a property of the engine, not a tuning
+  * knob: results, plans, jobs and tasks are the same without them.
+  *
+  * Spark's generated-class cache. Spark compiles each generated class with
+  * Janino (~11 ms a class) and keeps it in one LRU per JVM, keyed on the
+  * source text. A class evicted or renamed is compiled again, and the new
+  * class then runs in the interpreter until the JIT warms it again.
+  *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]]. The
+  *    default holds 100 classes. At sf0.01 the benchmark's 21 essentials
+  *    keys generate ~200 and the full registry ~2,000 a pass, so a runner
   *    cycling through its queries evicted most classes before their next
   *    use. 4096 is about twice the registry's measured working set. The conf is static:
   *    `CodeGenerator$` reads it once, when the JVM first generates code, so
@@ -56,13 +58,25 @@ object GraftSql {
   *    at sf0.01 still compiled 60 classes, with this conf too 4. The id
   *    stays in the plan and in a comment of the generated source, which is
   *    not part of the cache key.
+  *
+  * Streaming checkpoint commits.
+  *  - `spark.sql.streaming.checkpointFileManagerClass` = Spark's
+  *    `FileSystemBasedCheckpointFileManager`. Spark's default FileContext
+  *    manager looks up the link status of each rename's source and
+  *    destination, and on a local filesystem without libhadoop each lookup
+  *    forks `readlink`: 64 processes a stateful micro-batch. This one
+  *    renames with `rename(2)` and forks none, with the same temp-then-
+  *    rename protocol, atomicity and checksum files (ARCHITECTURE.md,
+  *    design rule 10).
   */
-object CodegenCache {
-  val MaxEntries = 4096L
+object SessionConfs {
+  val CodegenCacheEntries = 4096L
 
-  val Confs: Map[String, Any] = Map(
-    "spark.sql.codegen.cache.maxEntries" -> MaxEntries,
-    "spark.sql.codegen.useIdInClassName" -> false)
+  val All: Map[String, Any] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries,
+    "spark.sql.codegen.useIdInClassName" -> false,
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager].getName)
 }
 
 /** ONE session builder for every artifact-producing runner (Bench,
@@ -89,7 +103,8 @@ object CodegenCache {
   *    SMJ nodes flip to ShuffledHashJoin, broadcasts unchanged. AQE
   *    still falls back to SMJ where a hash build cannot fit;
   *  - UTC + no UI;
-  *  - Spark's generated-class cache kept effective by [[CodegenCache]];
+  *  - the engine-wide [[SessionConfs]]: the generated-class cache sized to
+  *    graft's working set, and checkpoint commits that fork no process;
   *  - `nanosAsLong` on from the start, the value `Tables.events` sets on
   *    its first read anyway: flipped mid-session, it would change the
   *    schema memo key of every table opened before it, and each of those
@@ -122,7 +137,7 @@ object RunnerSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(CodegenCache.Confs)
+      .config(SessionConfs.All)
     val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
@@ -142,7 +157,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(CodegenCache.Confs)
+      .config(SessionConfs.All)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

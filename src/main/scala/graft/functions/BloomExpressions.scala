@@ -855,7 +855,13 @@ object ShingleSet {
   }
   @volatile private var slot: Slot = _
 
-  def setFor(a: ArrayData): ShingleSet = {
+  /** The JVM-wide set for `a`, built on the first call for where its bytes
+    * live. `a` must be a constant array (a broadcast or a literal): an
+    * array handed out in a reused buffer (a scan's unsafe projection, a
+    * shuffle reader) keeps its buffer and offset while its contents change,
+    * and would get the previous array's set.
+    */
+  private[graft] def setFor(a: ArrayData): ShingleSet = {
     val base = ArrayMemo.base(a)
     val offset = ArrayMemo.offset(a)
     val n = a.numElements()

@@ -4,11 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.metrics.source.CodegenMetrics
 
-import graft.engine.{CodegenCache, Scoped}
+import graft.engine.{Scoped, SessionConfs}
 import graft.functions.SigIndex
 
 /** Spark's generated-class cache must hold graft's working set: every
-  * session builder applies [[CodegenCache]]'s confs, and a query run again
+  * session builder applies [[SessionConfs]], and a query run again
   * in the same JVM reuses its compiled classes instead of compiling them
   * with Janino once more.
   */
@@ -35,8 +35,8 @@ class CodegenCacheSpec extends SparkSpec {
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-  test("every session builder applies the codegen confs of the one constant") {
-    CodegenCache.Confs.foreach { case (k, v) =>
+  test("every session builder applies the session confs of the one constant") {
+    SessionConfs.All.foreach { case (k, v) =>
       assert(spark.sparkContext.getConf.get(k) === v.toString, k)
     }
     val sources = Seq("src/main/scala", "src/test/scala").flatMap { root =>
@@ -49,10 +49,10 @@ class CodegenCacheSpec extends SparkSpec {
     assert(builders.map(_._1).toSet.contains("src/test/scala/graft/SparkSpec.scala"))
     assert(builders.count(_._1 == "src/main/scala/graft/engine/Core.scala") === 2)
     builders.foreach { case (p, b) =>
-      assert("\\.config\\((graft\\.engine\\.)?CodegenCache\\.Confs\\)".r.findFirstIn(b).nonEmpty, s"$p: $b")
+      assert("\\.config\\((graft\\.engine\\.)?SessionConfs\\.All\\)".r.findFirstIn(b).nonEmpty, s"$p: $b")
     }
     // each conf key is spelled out once, in the constant
-    CodegenCache.Confs.keys.foreach { k =>
+    SessionConfs.All.keys.foreach { k =>
       assert(sources.filter(p => source(p).contains("\"" + k + "\"")) ===
         Seq("src/main/scala/graft/engine/Core.scala"), k)
     }

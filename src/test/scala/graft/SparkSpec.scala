@@ -11,7 +11,7 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config(graft.engine.CodegenCache.Confs)
+    .config(graft.engine.SessionConfs.All)
     .getOrCreate()
 
   def ts(iso: String): java.sql.Timestamp =
