@@ -35,7 +35,7 @@ object Bench {
       case other => sys.error(
         s"SPARK_GRAFT_BENCH_SUBSET=$other not recognized (known: r1)")
     }
-    // ONE builder shared with Verify/Explain/StageBench — see
+    // ONE builder shared with Verify/Explain/StageBench/Ab — see
     // graft.engine.RunnerSession for the full config rationale
     // (corpus-sized shuffle partitions, AQE, shuffled-hash preference,
     // UTC, SPARK_GRAFT_CONF overlay applied last).

@@ -26,15 +26,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val mode = if (args.length > 0) args(0) else "tumbling"
     val seconds = if (args.length > 1) args(1).toInt else 15
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName(s"graft-demo-$mode")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.engine.SessionConfs.All)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.local(4, s"graft-demo-$mode")
     val q = start(spark, mode)
     q.awaitTermination(seconds * 1000L)
     q.stop()

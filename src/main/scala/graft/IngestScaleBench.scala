@@ -44,39 +44,32 @@ object IngestScaleBench {
     }
 
     // ---- near-dup ingest gate against the stored signature index ----
-    // A/B: the flat parquet band index (the static side re-shuffles per
-    // micro-batch) vs the BUCKETED catalog table (bucket layout carries
-    // the join partitioning — no per-batch static exchange). Same
-    // batches, same store; the per-batch deltas isolate the layout.
+    // (a bucketed band index measured no gain over the flat one three
+    // times: BASELINE.md, rounds 15, 17 and 19)
     {
       val base = SigIndex.stageOnce(spark, sfDir)
       val corpusSigs = graft.engine.Tables.parquet(spark, s"$base/minhash_sigs")
-      val nDocs = graft.engine.Tables.parquet(spark, s"$base/band_index")
-        .select(col("doc_id")).distinct().count()
+      val bands = graft.engine.Tables.parquet(spark, s"$base/band_index")
+      val nDocs = bands.select(col("doc_id")).distinct().count()
       val batchDocs = graft.engine.Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text")).limit(nBatches * 1000).collect()
         .map(r => StreamingOps.TimedDoc(r.getLong(0), r.getString(1),
           java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T12:00:00Z"))))
         .grouped(1000).toIndexedSeq
-      val variants = Seq(
-        "flat" -> (() => graft.engine.Tables.parquet(spark, s"$base/band_index")),
-        "bucketed" -> (() => spark.table(SigIndex.stageBandsBucketed(spark, sfDir))))
-      for ((layout, bands) <- variants) {
-        val input = MemoryStream[StreamingOps.TimedDoc]
-        val q = StreamingOps.dedupIncrementalStream(
-            input.toDF(), "doc_id", "text", "ts", "10 seconds", corpusSigs, bands(),
-            servedTtl = None)
-          .writeStream.format("memory").queryName(s"ingest_dedup_$layout")
-          .outputMode("append").start()
-        try perBatch(s"dedup_incremental/$layout (store=$nDocs docs)")(
-          i => { input.addData(batchDocs(i - 1).toSeq); () },
-          () => q.processAllAvailable(),
-          () => Option(q.lastProgress)
-            .flatMap(pr => Option(pr.durationMs.get("triggerExecution")))
-            .map(_.longValue).getOrElse(-1L), batchDocs.size)
-        finally q.stop()
-        graft.engine.Scoped.releaseAll(spark)
-      }
+      val input = MemoryStream[StreamingOps.TimedDoc]
+      val q = StreamingOps.dedupIncrementalStream(
+          input.toDF(), "doc_id", "text", "ts", "10 seconds", corpusSigs, bands,
+          servedTtl = None)
+        .writeStream.format("memory").queryName("ingest_dedup")
+        .outputMode("append").start()
+      try perBatch(s"dedup_incremental (store=$nDocs docs)")(
+        i => { input.addData(batchDocs(i - 1).toSeq); () },
+        () => q.processAllAvailable(),
+        () => Option(q.lastProgress)
+          .flatMap(pr => Option(pr.durationMs.get("triggerExecution")))
+          .map(_.longValue).getOrElse(-1L), batchDocs.size)
+      finally q.stop()
+      graft.engine.Scoped.releaseAll(spark)
     }
 
     // ---- ANN ingest (cell assignment) against the stored centroids ----

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-time fixture writer: materializes the deterministic synthetic media
   * table ([[graft.multimodal.Multimodal.syntheticMedia]], 300 rows) as a
   * single parquet file at [[graft.multimodal.Multimodal.MediaFixturePath]],
@@ -15,13 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 object MediaFixture {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.engine.SessionConfs.All)
-      .getOrCreate()
+    val spark = graft.engine.GraftSession.local(4, "graft-media-fixture")
     spark.sparkContext.setLogLevel("ERROR")
     graft.multimodal.Multimodal.syntheticMedia(spark, 300)
       .coalesce(1)

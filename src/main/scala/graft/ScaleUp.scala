@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only bench-data scaler: builds an sf1-equivalent RELATIONAL dataset
@@ -125,13 +125,7 @@ object ScaleUp {
     val dst = if (args.length > 1) args(1) else "/root/repo/data/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.engine.SessionConfs.All)
-      .getOrCreate()
+    val spark = graft.engine.GraftSession.local(cpus.toInt, "graft-scaleup")
     spark.sparkContext.setLogLevel("ERROR")
 
     def replicate(name: String, keys: Seq[String]): Unit = {

@@ -46,9 +46,9 @@ object GraftSql {
   *    cycling through its queries evicted most classes before their next
   *    use. 4096 is about twice the registry's measured working set. The conf is static:
   *    `CodeGenerator$` reads it once, when the JVM first generates code, so
-  *    it must be on the builder. A later `spark.conf.set` is silently
-  *    ignored, and a second session in the same JVM shares the first one's
-  *    cache.
+  *    it must be on the builder. A later `spark.conf.set` fails with an
+  *    AnalysisException, and a second session in the same JVM silently
+  *    shares the first one's cache.
   *  - `spark.sql.codegen.useIdInClassName` = false. Spark otherwise names a
   *    whole-stage class after its codegen stage id. Under adaptive
   *    execution the ids are handed out as query stages are planned, in an
@@ -80,7 +80,7 @@ object SessionConfs {
 }
 
 /** ONE session builder for every artifact-producing runner (Bench,
-  * Verify, Explain, StageBench, IngestScaleBench): the round-14 verdict
+  * Verify, Explain, StageBench, IngestScaleBench, Ab): the round-14 verdict
   * found the bench executing `preferSortMergeJoin=false` while the plan
   * dumper and the gate runner did not — the committed plan artifacts
   * could never show the ShuffledHashJoin strategy the benches actually
@@ -98,10 +98,11 @@ object SessionConfs {
   *  - shuffled-hash over sort-merge when broadcast is off the table:
   *    with no downstream consumer of SMJ's sort order, the hash build
   *    skips sorting both sides of a 600 M-row join. Same-session
-  *    interleaved min-of-2 at sf100 (graft.ShjSweep, round 14): q9 73.0
-  *    vs 99.8 s, q16 89.8 vs 135.6 s; mechanism-verified — exactly the
-  *    SMJ nodes flip to ShuffledHashJoin, broadcasts unchanged. AQE
-  *    still falls back to SMJ where a hash build cannot fit;
+  *    interleaved min-of-2 at sf100 (BASELINE.md, round-14
+  *    shuffled-hash row): q9 73.0 vs 99.8 s, q16 89.8 vs 135.6 s;
+  *    mechanism-verified — exactly the SMJ nodes flip to
+  *    ShuffledHashJoin, broadcasts unchanged. AQE still falls back to
+  *    SMJ where a hash build cannot fit;
   *  - UTC + no UI;
   *  - the engine-wide [[SessionConfs]]: the generated-class cache sized to
   *    graft's working set, and checkpoint commits that fork no process;
@@ -110,23 +111,26 @@ object SessionConfs {
   *    schema memo key of every table opened before it, and each of those
   *    would pay a second inference job on its next open;
   *  - SPARK_GRAFT_CONF="k=v;k=v" overlay applied LAST, so a config A/B
-  *    can override any default above.
+  *    can override any default above. `graft.Ab` reads its arms with the
+  *    same [[parseConf]].
   *
   * Results are strategy- and partition-count-invariant (r13 parity ran
   * all 177 gate keys at the corpus-derived width; SHJ/SMJ agree by
   * definition), so Verify sharing this build changes no hashes.
   */
 object RunnerSession {
+  /** A conf overlay in `k=v;k=v` form; blank entries are skipped. */
+  def parseConf(overlay: String): Seq[(String, String)] =
+    overlay.split(";").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"conf overlay entry '$kv' is not k=v")
+      (kv.take(i), kv.drop(i + 1))
+    }
+
   def build(sfDir: String, defaultCpus: String = "4",
             logLevel: String = "WARN"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-      .map { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"SPARK_GRAFT_CONF entry '$kv' is not k=v")
-        (kv.take(i), kv.drop(i + 1))
-      }
+    val extraConf = parseConf(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions",

@@ -224,33 +224,15 @@ object Dedup {
   private[functions] def incrementalMatches(mhNew: DataFrame, bandsNew: DataFrame,
                                             mhEx: DataFrame, bandsEx: DataFrame,
                                             idCol: String, threshold: Double,
-                                            numHashes: Int,
-                                            batchJoin: String = "shuffle"): DataFrame = {
-    // Validated at entry (ADVICE r16): a typo'd strategy would silently
-    // fall through to the "shuffle" baseline, and an A/B sweep (IncrSweep)
-    // would then time three identical plans and report phantom parity.
-    require(Set("shuffle", "broadcast", "semi").contains(batchJoin),
-      s"batchJoin must be one of shuffle|broadcast|semi, got '$batchJoin'")
+                                            numHashes: Int): DataFrame = {
+    // Both sides exchange on (band, sig). Broadcasting the batch's band
+    // table, or pre-pruning the corpus side with a broadcast semi join on
+    // the batch's band keys, measured slower at sf10 and sf100
+    // (BASELINE.md, round-16 and round-18 dedup_incremental_staged rows).
     val ex = bandsEx.select(col(idCol).as("doc_ex"), col("band"), col("sig"))
-    val nw0 = bandsNew
+    val nw = bandsNew
       .select(col(idCol).as("doc_new"), col("band").as("band_n"), col("sig").as("sig_n"))
-    // Candidate-join strategy against the (much larger) existing-corpus
-    // band index — the r15 advice lever for the staged ingest serve:
-    //  - "shuffle":   both sides exchange on (band, sig) — the baseline.
-    //  - "broadcast": the batch's band table broadcasts; the corpus side
-    //    is scanned once and NEVER exchanged — rows die at the join right
-    //    above the store scan. Payload is |batch|·bands rows.
-    //  - "semi":      the corpus side is pre-pruned by a broadcast
-    //    LEFT SEMI on the batch's DISTINCT band keys (smaller payload
-    //    than "broadcast" — no doc ids), then the survivors (band
-    //    collisions only) flow into the regular shuffle join.
-    // Winner by measurement (IncrSweep, sf10+sf100): see BASELINE.md.
-    val nw = if (batchJoin == "broadcast") broadcast(nw0) else nw0
-    val exPruned = if (batchJoin == "semi")
-      ex.join(broadcast(nw0.select(col("band_n"), col("sig_n")).distinct()),
-        col("band") === col("band_n") && col("sig") === col("sig_n"), "left_semi")
-    else ex
-    val pairs = exPruned.join(nw, col("band") === col("band_n") && col("sig") === col("sig_n"))
+    val pairs = ex.join(nw, col("band") === col("band_n") && col("sig") === col("sig_n"))
       .select(col("doc_new"), col("doc_ex"))
       .distinct()
     val a = mhNew.select(col(idCol).as("doc_new") +:
@@ -534,8 +516,9 @@ object Dedup {
   /** Winnowing stride shared by [[ngramJaccardPairs]]'s default, the
     * `dedup_ngram` registration, and [[ngramJaccardSql]] — ONE constant so
     * the Scala default and the oracle can never silently diverge. 6 won
-    * the round-4 NgramSweep (identical pair output to stride 4 at sf0.01,
-    * ~40% less shingle volume).
+    * the round-4 stride sweep (identical pair output to stride 4 at
+    * sf0.01, ~40% less shingle volume; BASELINE.md, round-4 dedup_ngram
+    * stride row).
     */
   val NgramStride: Int = 6
 
@@ -774,7 +757,7 @@ object Dedup {
     * computes the exact same candidate set — the check is a hash match,
     * not a recall bound.
     *
-    * SCALING LAW (measured, round-5 sf1 sweep — graft.LshGeometrySweep):
+    * SCALING LAW (measured at sf1; BASELINE.md, round-5 band-geometry row):
     * hash-uniform candidate volume is ≈ numBands · n² / 2^(bitsPerBand+1) —
     * banding shrinks the n² CONSTANT, not the exponent, so band geometry
     * must be sized to the corpus: growing n by k× needs bitsPerBand to
@@ -873,7 +856,8 @@ object Dedup {
     * round-11 rewrite removed from the unprobed path — correct there,
     * because without probes the band rows already carry vectors at no
     * expansion; with probes the narrow-first shape exchanges ~20× fewer
-    * bytes. Measured A/B in graft.LshGeometrySweep.
+    * bytes. Measured in BASELINE.md's round-14 post-clamp LSH geometry
+    * row.
     */
   private[graft] def embLshScoreProbed(bands: DataFrame, n: DataFrame, idCol: String,
                                            threshold: Double, bitsPerBand: Int,
@@ -958,7 +942,8 @@ object Dedup {
 
   /** Band geometry PLUS probe policy for a corpus of `n` vectors — the
     * round-14 rule past [[lshBitsFor]]'s 16-bit clamp, CHOSEN FROM
-    * MEASUREMENT (graft.LshProbeSweep at sf10 + sf100; BASELINE.md):
+    * MEASUREMENT (sf10 + sf100; BASELINE.md, round-14 post-clamp LSH
+    * geometry row):
     *
     * Default (`probeRecall = false`): bits keep growing with the corpus
     * — `ceil(log2(n/targetBucket))`, UNCLAMPED (62 = the Long-packing
@@ -1024,7 +1009,7 @@ object Dedup {
     // lshBitsFor rule (probe off) at every corpus up to ~1 M vectors —
     // gates and oracles unchanged — and the volume-equalized 1-bit
     // multi-probe regime past the old 16-bit clamp (round 14; A/B in
-    // BASELINE.md's LshProbeSweep table).
+    // BASELINE.md's round-14 post-clamp LSH geometry row).
     val (bits, probe) = lshGeometryFor(math.max(1L, emb.count()), targetBucket)
     val n = Similarity.withNorm(emb, idCol, vecCol).persist()
     val bands = embLshBandTable(n, idCol, numBands * bits, bits, dim).persist()
@@ -1471,12 +1456,6 @@ object Dedup {
     * arithmetic makes the two paths bit-identical, so the oracle is
     * shared unchanged.
     */
-  /** Dev-sweep window into [[pagerankOnEdgeDeg]] (PrSweep only). */
-  private[graft] def pagerankOnEdgeDegForSweep(edgeDeg: DataFrame, deg: DataFrame,
-                                               idCol: String, iters: Int,
-                                               scale: Long): DataFrame =
-    pagerankOnEdgeDeg(edgeDeg, deg, idCol, iters, scale)
-
   private[functions] def pagerankOnEdgeDeg(edgeDeg: DataFrame, deg: DataFrame,
                                            idCol: String, iters: Int,
                                            scale: Long): DataFrame = {
@@ -1639,7 +1618,7 @@ object Dedup {
     // paying the n^2/2^16 candidate cliff
     QueryDef("dedup_simhash_auto", (s, dir) => simhashPairsAuto(Tables.documents(s, dir), "doc_id", "text"), Some(simhashAutoSql)),
     // NgramStride (6, vs the shingles default 4): the round-4 sweep
-    // (NgramSweep) measured 3.0 s vs 5.8 s at sf0.1 with an IDENTICAL
+    // (BASELINE.md) measured 3.0 s vs 5.8 s at sf0.1 with an IDENTICAL
     // pair set at both strides (sym-diff 0 at sf0.01) — sparser
     // winnowing, same recall at the 0.8 threshold. Registration, Scala
     // default, and oracle all read the one constant.

@@ -337,45 +337,6 @@ object SigIndex {
         .write.mode("overwrite").parquet(s"$base/band_index")
     }
 
-  /** The band index as a BUCKETED catalog table — the shape the
-    * STREAMING incremental-dedup serve needs (round-14 IngestScaleBench:
-    * per-batch cost grew ~2.5× per store decade because the stream-static
-    * join re-shuffled the full static band index EVERY micro-batch). A
-    * table bucketed on the join keys (band, sig) carries its partitioning
-    * in the catalog, so the static subtree of each micro-batch plan is a
-    * bare bucket-pruned scan — zero Exchange, zero per-batch sort (bucket
-    * files are pre-sorted); only the kilobyte-scale batch side shuffles.
-    * On a 1000-executor cluster this is the difference between re-hashing
-    * a corpus-scale index per trigger and reading co-located bucket
-    * files.
-    *
-    * Spark's in-memory catalog forgets table METADATA per session, so each
-    * new driver run re-buckets from the stored band index (a CTAS, not a
-    * metadata-only write) — the warehouse files a previous session left
-    * behind are deleted first, since Spark 4's default
-    * allowNonEmptyLocationInCTAS=false rejects a CREATE into a non-empty
-    * location (same handling as [[graft.operators.Scale.stageBucketedOnce]]).
-    * The table name fingerprints the corpus dir, the signature GEOMETRY,
-    * and the BUCKET COUNT (which derives from the session's corpus-sized
-    * shuffle width): a SPARK_GRAFT_CONF override of the shuffle width or a
-    * future geometry bump gets its own table instead of silently reusing
-    * one bucketed under different parameters.
-    */
-  def stageBandsBucketed(spark: SparkSession, dir: String): String = {
-    val buckets = spark.sessionState.conf.numShufflePartitions
-    val tbl = s"graft_sig_bands_bkt_${Stores.dirTag(dir)}_h${NumHashes}b${RowsPerBand}n$buckets"
-    if (!spark.catalog.tableExists(tbl)) {
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      Tables.parquet(spark, s"${stageOnce(spark, dir)}/band_index")
-        .write.bucketBy(buckets, "band", "sig").sortBy("band", "sig")
-        .mode("overwrite").format("parquet").saveAsTable(tbl)
-    }
-    tbl
-  }
-
   /** LSH candidate pairs served from the STORED band index — the
     * dedup_minhash serve that never touches document text: one equi-join
     * over (band, sig) rows already on disk. Bit-for-bit equal to the
@@ -531,13 +492,7 @@ object SigIndex {
   def dedupIncrementalStaged(spark: SparkSession, dir: String,
                              newPred: org.apache.spark.sql.Column =
                                pmod(col("doc_id"), lit(5L)) === 0L,
-                             threshold: Double = 0.5,
-                             batchJoin: String = "shuffle"): DataFrame = {
-    // Fail before the store staging / batch persist, not after (ADVICE
-    // r16) — incrementalMatches re-validates, but by then a cold store
-    // build may already have run.
-    require(Set("shuffle", "broadcast", "semi").contains(batchJoin),
-      s"batchJoin must be one of shuffle|broadcast|semi, got '$batchJoin'")
+                             threshold: Double = 0.5): DataFrame = {
     val base = stageOnce(spark, dir)
     val batch = Tables.documents(spark, dir).filter(newPred)
     val mhB = Dedup.minhashSignaturesFromText(batch, "doc_id", "text", NumHashes)
@@ -546,20 +501,7 @@ object SigIndex {
     val mhEx = Tables.parquet(spark, s"$base/minhash_sigs").filter(!newPred)
     val bandsEx = Tables.parquet(spark, s"$base/band_index").filter(!newPred)
     Dedup.incrementalMatches(mhB, bandsB, mhEx, bandsEx, "doc_id", threshold,
-      NumHashes, batchJoin)
-  }
-
-  /** The SIGNING stage of [[dedupIncrementalStaged]] alone — batch text
-    * scan + compiled MinHashSlices + band derivation, no store access.
-    * Dev decomposition hook (IncrSweep): full-serve time minus this is
-    * the candidate-join + scoring + window share.
-    */
-  def signBatchOnly(spark: SparkSession, dir: String,
-                    newPred: org.apache.spark.sql.Column =
-                      pmod(col("doc_id"), lit(5L)) === 0L): DataFrame = {
-    val batch = Tables.documents(spark, dir).filter(newPred)
-    val mhB = Dedup.minhashSignaturesFromText(batch, "doc_id", "text", NumHashes)
-    Dedup.minhashBands(mhB, "doc_id", NumHashes, RowsPerBand)
+      NumHashes)
   }
 
   /** One micro-batch of the end-to-end ingest curation pipeline

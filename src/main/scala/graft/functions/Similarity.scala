@@ -270,9 +270,10 @@ object Similarity {
     // 5): a corpus compacted into a couple of parquet splits plans 1-2
     // scan partitions and the scoring BNLJ inherits that width — at a
     // 2000-query batch the whole |corpus|×|batch| scoring ran near
-    // single-threaded (measured by HardNegSweep). Re-shard ONLY when the
-    // scan is narrower than the session width: a corpus big enough to
-    // have real splits keeps its layout and pays no shuffle.
+    // single-threaded (BASELINE.md, round-11 hard_negatives_staged
+    // crossover row). Re-shard ONLY when the scan is narrower than the
+    // session width: a corpus big enough to have real splits keeps its
+    // layout and pays no shuffle.
     val parts = emb.sparkSession.sessionState.conf.numShufflePartitions
     // read the scan width off the INPUT, before withNorm: converting the
     // derived frame to an RDD would force full physical planning of the
@@ -764,8 +765,9 @@ object Similarity {
   /** The serve half of [[ivfSearch]] over an ALREADY-ASSIGNED corpus
     * (id, vector, cell) from any provenance — inline [[assignCells]],
     * hierarchical [[assignCellsHier]], or staged postings. Exposed
-    * separately so assignment-policy A/Bs (graft.AnnAssignSweep) score
-    * the SAME probe over competing assignments.
+    * separately so assignment-policy A/Bs score the SAME probe over
+    * competing assignments (BASELINE.md, round-13 hierarchical-assignment
+    * row).
     */
   private[graft] def ivfSearchAssigned(corpus: DataFrame, queries: DataFrame,
                         centroids: DataFrame,

@@ -432,10 +432,11 @@ object TextAnalysis {
     // localCheckpoint per round, NOT persist: a persisted chain keeps the
     // whole logical-plan lineage, and the nested merge folds make
     // re-analysis cost grow with every round — measured superlinear wall
-    // time by merges=64 (BpeSweep). The checkpoint severs lineage so
-    // every round re-plans a constant-size frame; round N−1's blocks are
-    // dropped as soon as round N materializes (connected-components
-    // hygiene, graft.engine.Scoped.unpersistCheckpoint).
+    // time by merges=64 (BASELINE.md, round-11 BPE trainer row). The
+    // checkpoint severs lineage so every round re-plans a constant-size
+    // frame; round N−1's blocks are dropped as soon as round N
+    // materializes (connected-components hygiene,
+    // graft.engine.Scoped.unpersistCheckpoint).
     var vocab = bpeSeedVocab(docs, textCol).localCheckpoint()
     val adopted = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     var step = 1

@@ -787,7 +787,7 @@ object VectorExpressions {
 
 /** SparkSessionExtensions entry point: lets deployments wire the engine's
   * custom expressions at session-build time —
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * a session builder's `.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.functions.GraftExtensions` — instead of the
   * per-session [[VectorExpressions.register]] call the operators make
   * defensively.

@@ -223,9 +223,9 @@ object Extended {
     * 700 of 720 hours, so span-pruning has nothing to prune) are
     * generated AFTER the shuffle and never exchanged or sorted. The
     * previous union-scan form (tag grid + events, running
-    * last(ignoreNulls) window — kept as
-    * [[resampleLocfUnionScan]] for the A/B) shuffled and window-sorted
-    * all 1.15 B tagged rows; measured at sf100 in graft.LocfSweep.
+    * last(ignoreNulls) window) shuffled and window-sorted all 1.15 B
+    * tagged rows: 4.6× slower at sf100 (BASELINE.md, round-14
+    * resample_locf row).
     *
     * Range algebra (matches ASOF-inner-join semantics exactly):
     * event at `us` with next event at `nus` covers hours
@@ -263,34 +263,6 @@ object Extended {
         explode(sequence(col("g0"), col("g1"), lit(3600000000L))).as("us"),
         col("v"))
       .select(col(keyCol), expr("us div 1000000").as("gts_s"), col("v").as("locf_value"))
-  }
-
-  /** The round-5..13 union-scan form of [[resampleLocf]], kept as the
-    * A/B counterpart (graft.LocfSweep): tag grid and event rows, ONE
-    * hash shuffle on the key, running last(ignoreNulls) window. Correct
-    * and general (it also fills MISSING values, not just missing rows),
-    * but the shuffle carries events + grid ≈ 11× the event bytes at
-    * sf100 — the lead-range form above exchanges events only.
-    */
-  private[graft] def resampleLocfUnionScan(events: DataFrame, keyCol: String,
-                                           tsCol: String, valCol: String): DataFrame = {
-    val ev = events.filter(col(valCol).isNotNull)
-      .select(col(keyCol), unix_micros(col(tsCol)).as("us"), col(valCol).as("v"))
-    val bounds = ev.groupBy(col(keyCol)).agg(min(col("us")).as("us0"), max(col("us")).as("us1"))
-    val grid = bounds.select(col(keyCol),
-      explode(sequence(
-        expr("(us0 div 3600000000) * 3600000000"),
-        expr("(us1 div 3600000000) * 3600000000"),
-        lit(3600000000L))).as("us"))
-    val tagged = ev.select(col(keyCol), col("us"), col("v"), lit(0).as("is_grid"))
-      .unionAll(grid.select(col(keyCol), col("us"), lit(null).cast("double").as("v"), lit(1).as("is_grid")))
-    val w = Window.partitionBy(col(keyCol))
-      .orderBy(col("us").asc, col("is_grid").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tagged
-      .withColumn("locf_value", last(col("v"), ignoreNulls = true).over(w))
-      .filter(col("is_grid") === 1 && col("locf_value").isNotNull)
-      .select(col(keyCol), expr("us div 1000000").as("gts_s"), col("locf_value"))
   }
 
   val defs: Seq[QueryDef] = Seq(

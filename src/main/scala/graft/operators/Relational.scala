@@ -250,7 +250,8 @@ object Relational {
         // SLOWER (22.7 vs 17.2 s) — the synthetic fact's bridge is
         // nearly as large as the fact itself, so the extra distinct
         // shuffle buys no reduction and the two-phase countDistinct
-        // below already collapses map-side (graft.RelSweep).
+        // below already collapses map-side (BASELINE.md, round-12 TPC-H
+        // laggard row).
         Tables.lineitem(s, dir).select(col("l_partkey"), col("l_suppkey"))
           .filter(col("l_suppkey").isNotNull)
           .join(badSupp, col("l_suppkey") === col("s_suppkey"), "left_anti")
@@ -366,9 +367,10 @@ object Relational {
       // aggregate-then-join-back form reads lineitem twice and its two
       // exchanges cannot be reused (the agg side partial-aggregates
       // BEFORE its exchange, so the shuffle subplans differ) — measured
-      // 1.3× slower at sf10 and ~2x at sf100 (RelSweep r13, 600 M rows:
-      // window 39.9-81.5 s vs join-back 76.4-136.2 s; the window sort
-      // stays in-partition and beats the second full-fact shuffle). The
+      // 1.3× slower at sf10 and ~2x at sf100 (BASELINE.md, round-13 q17
+      // row; 600 M rows: window 39.9-81.5 s vs join-back 76.4-136.2 s;
+      // the window sort stays in-partition and beats the second
+      // full-fact shuffle). The
       // threshold comparison (0.5 * avg) is one IEEE multiply on an
       // exact decimal-accumulated mean — the same value in both engines
       // (and as the join-back form), so the row set is identical and the

@@ -25,14 +25,6 @@ class CodegenCacheSpec extends SparkSpec {
     "\"([a-z0-9_]+)\"".r.findAllMatchIn(list).map(_.group(1)).toSeq
   }
 
-  /** The smallest sf dir TESTDATA.md documents. */
-  private def smallest: String = {
-    val doc = source("TESTDATA.md")
-    "`([^`]*/sf[0-9.]+)/?`".r.findAllMatchIn(doc).map(_.group(1)).toSeq
-      .find(d => new java.io.File(d).isDirectory)
-      .getOrElse(cancel("no sf dir of TESTDATA.md is present"))
-  }
-
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   test("every session builder applies the session confs of the one constant") {
@@ -42,14 +34,14 @@ class CodegenCacheSpec extends SparkSpec {
     val sources = Seq("src/main/scala", "src/test/scala").flatMap { root =>
       Files.walk(Paths.get(root)).toArray.toSeq.map(_.toString).filter(_.endsWith(".scala"))
     }
-    // every builder: RunnerSession.build, GraftSession.local, SparkSpec and the dev mains
-    val builders = sources.flatMap { p =>
-      "(?s)SparkSession\\.builder\\(\\).*?getOrCreate\\(\\)".r.findAllIn(source(p)).map(p -> _)
-    }
-    assert(builders.map(_._1).toSet.contains("src/test/scala/graft/SparkSpec.scala"))
-    assert(builders.count(_._1 == "src/main/scala/graft/engine/Core.scala") === 2)
-    builders.foreach { case (p, b) =>
-      assert("\\.config\\((graft\\.engine\\.)?SessionConfs\\.All\\)".r.findFirstIn(b).nonEmpty, s"$p: $b")
+    // the only session builders: RunnerSession.build and GraftSession.local
+    // in Core.scala, and SparkSpec; every main goes through one of the two
+    val builders = sources.flatMap(p => "SparkSession\\.builder\\(\\)".r.findAllIn(source(p)).map(_ => p))
+    val core = "src/main/scala/graft/engine/Core.scala"
+    val spec = "src/test/scala/graft/SparkSpec.scala"
+    assert(builders.groupBy(identity).view.mapValues(_.size).toMap === Map(core -> 2, spec -> 1))
+    Seq(core -> 2, spec -> 1).foreach { case (p, n) =>
+      assert("\\.config\\((graft\\.engine\\.)?SessionConfs\\.All\\)".r.findAllIn(source(p)).size === n, p)
     }
     // each conf key is spelled out once, in the constant
     SessionConfs.All.keys.foreach { k =>
@@ -77,7 +69,7 @@ class CodegenCacheSpec extends SparkSpec {
 
   test("a second pass over the essentials keys compiles no class") {
     assert(essentials.size === 21)
-    val dir = smallest
+    val dir = smallestTestDir
     val defs = SparkEntry.queries
     SigIndex.stageClusters(spark, dir)
     def pass(): Seq[(String, Long)] = essentials.map { k =>

@@ -591,8 +591,8 @@ class DedupSimilaritySpec extends SparkSpec {
     for (n <- Seq(500L, 20000L, 200000L, 16L * 65536L))
       assert(Dedup.lshGeometryFor(n) === ((Dedup.lshBitsFor(n), 0)), s"n=$n")
     // past it: bits keep growing (occupancy ~= targetBucket at any n —
-    // the CHOSEN rule; the LshProbeSweep sf100 A/B measured the probed
-    // alternative 2.2x slower for +0.005 production recall)
+    // the CHOSEN rule; the round-14 sf100 A/B (BASELINE.md) measured the
+    // probed alternative 2.2x slower for +0.005 production recall)
     assert(Dedup.lshGeometryFor(2000000L) === ((17, 0))) // the sf100 corpus
     val unclamped = Seq(2000000L, 20000000L, 200000000L, 2000000000L).map { n =>
       val (b, p) = Dedup.lshGeometryFor(n)

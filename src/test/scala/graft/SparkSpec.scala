@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +14,43 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .config(graft.engine.SessionConfs.All)
     .getOrCreate()
+
+  /** The sf dirs TESTDATA.md documents, where present, smallest first. */
+  lazy val testDataDirs: Seq[String] = {
+    val doc = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("TESTDATA.md")), "UTF-8")
+    "`([^`]*/sf[0-9.]+)/?`".r.findAllMatchIn(doc).map(_.group(1)).toSeq.distinct
+      .filter(d => new java.io.File(d).isDirectory)
+  }
+
+  /** The smallest sf dir TESTDATA.md documents; cancels the test if none is present. */
+  def smallestTestDir: String =
+    testDataDirs.headOption.getOrElse(cancel("no sf dir of TESTDATA.md is present"))
+
+  /** Spark jobs started while `body` runs. Listener events arrive in
+    * order, so once a sentinel job started after `body` is seen, every
+    * job `body` launched has been counted.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val sentinel = s"jobs-during-sentinel-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
+          seen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job never seen")
+      jobs.get
+    } finally sc.removeSparkListener(l)
+  }
 
   def ts(iso: String): java.sql.Timestamp =
     java.sql.Timestamp.from(java.time.Instant.parse(iso))

@@ -2,7 +2,6 @@ package graft
 
 import scala.util.Try
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -21,14 +20,7 @@ import graft.functions.{AnnIndex, SigIndex}
   */
 class TablesSeamSpec extends SparkSpec {
 
-  /** The sf dirs TESTDATA.md documents, where present. */
-  private val sfDirs: Seq[String] = {
-    val doc = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("TESTDATA.md")), "UTF-8")
-    "`([^`]*/sf[0-9.]+)/?`".r.findAllMatchIn(doc).map(_.group(1)).toSeq.distinct
-      .filter(d => new java.io.File(d).isDirectory)
-  }
-  private def smallest: String = sfDirs.head
+  private def smallest: String = testDataDirs.head
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -74,39 +66,14 @@ class TablesSeamSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs started while `body` runs. Listener events arrive in
-    * order, so once a sentinel job started after `body` is seen, every
-    * job `body` launched has been counted.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val sentinel = s"tables-seam-sentinel-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
-          seen.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobDescription(sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job never seen")
-      jobs.get
-    } finally sc.removeSparkListener(l)
-  }
-
   private def tempDir(): String =
     java.nio.file.Files.createTempDirectory("tables-seam-spec").toString
 
   test("seam schema and analyzed plan equal a plain read: every table, every sf dir, nanosAsLong off and on") {
-    assert(sfDirs.nonEmpty, "no testdata dirs found")
+    assert(testDataDirs.nonEmpty, "no testdata dirs found")
     Seq("false", "true").foreach { nanos =>
       withConf(NanosAsLong, nanos) {
-        for (dir <- sfDirs; t <- GraftSql.tableNames) assertSameAsPlain(Tables.path(dir, t))
+        for (dir <- testDataDirs; t <- GraftSql.tableNames) assertSameAsPlain(Tables.path(dir, t))
       }
     }
   }
@@ -201,7 +168,7 @@ class TablesSeamSpec extends SparkSpec {
   }
 
   test("rowCount equals count() for every table in every sf dir") {
-    for (dir <- sfDirs; t <- GraftSql.tableNames) {
+    for (dir <- testDataDirs; t <- GraftSql.tableNames) {
       val path = Tables.path(dir, t)
       assert(Tables.rowCount(spark, path) === spark.read.parquet(path).count(), path)
     }
