@@ -73,13 +73,17 @@ object Ab {
 
   /** Runs `df` once as its digest: the row count and the sum of one 64-bit
     * hash per row, doubles rounded to 9 places as tools/check.py rounds
-    * them. Also returns the join operators of the plan that ran.
+    * them. Each column's null flag is hashed beside its value, because
+    * `xxhash64` skips a null field: without the flags (null, 1) and
+    * (1, null) hash alike. Also returns the join operators of the plan
+    * that ran.
     */
   private[graft] def digestRun(df: DataFrame): (Digest, Joins) = {
     val named = df.toDF(df.columns.indices.map(i => s"c$i"): _*)
-    val cols = named.schema.fields.toSeq.map { f =>
-      if (f.dataType == DoubleType || f.dataType == FloatType) bround(col(f.name).cast(DoubleType), 9)
-      else col(f.name)
+    val cols = named.schema.fields.toSeq.flatMap { f =>
+      val c = col(f.name)
+      Seq(isnull(c),
+        if (f.dataType == DoubleType || f.dataType == FloatType) bround(c.cast(DoubleType), 9) else c)
     }
     val agg = named.select(xxhash64(cols: _*).cast("decimal(20,0)").as("h"))
       .agg(count(lit(1)), sum(col("h")))

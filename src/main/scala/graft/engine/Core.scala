@@ -68,6 +68,19 @@ object GraftSql {
   *    renames with `rename(2)` and forks none, with the same temp-then-
   *    rename protocol, atomicity and checksum files (ARCHITECTURE.md,
   *    design rule 10).
+  *
+  * Local file creation.
+  *  - `spark.hadoop.fs.file.impl` = [[GraftLocalFileSystem]]. Hadoop's
+  *    `file:` filesystem sets the permission bits of every file and
+  *    directory it creates by forking `chmod` when libhadoop is absent:
+  *    16 processes a stateful micro-batch, 350 in a benchmark set-up that
+  *    builds a store and writes parquet. This one makes the chmod(2) call
+  *    itself, with the same bits, `.crc` sidecars and renames. Hadoop
+  *    caches one `FileSystem` per scheme, authority and user in a JVM and
+  *    hands it to every later lookup, whatever that lookup's conf names,
+  *    so this takes effect only where a graft session is built before the
+  *    JVM opens its first `file:` path through Hadoop; every graft main
+  *    does so (`LocalFilesSpec` checks the session's filesystem).
   */
 object SessionConfs {
   val CodegenCacheEntries = 4096L
@@ -76,7 +89,8 @@ object SessionConfs {
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries,
     "spark.sql.codegen.useIdInClassName" -> false,
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      classOf[org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager].getName)
+      classOf[org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager].getName,
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName)
 }
 
 /** ONE session builder for every artifact-producing runner (Bench,
@@ -105,7 +119,8 @@ object SessionConfs {
   *    SMJ where a hash build cannot fit;
   *  - UTC + no UI;
   *  - the engine-wide [[SessionConfs]]: the generated-class cache sized to
-  *    graft's working set, and checkpoint commits that fork no process;
+  *    graft's working set, and checkpoint commits and local file creation
+  *    that fork no process;
   *  - `nanosAsLong` on from the start, the value `Tables.events` sets on
   *    its first read anyway: flipped mid-session, it would change the
   *    schema memo key of every table opened before it, and each of those

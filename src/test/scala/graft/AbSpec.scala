@@ -55,5 +55,9 @@ class AbSpec extends SparkSpec {
     assert(digest(a) === digest(reordered))
     assert(digest(a).rows === digest(oneRowOff).rows)
     assert(digest(a) !== digest(oneRowOff))
+    // xxhash64 skips a null field; the digest must still see which column holds it
+    val nullLeft = Seq[(Option[Int], Option[Int])]((None, Some(1))).toDF("x", "y")
+    val nullRight = Seq[(Option[Int], Option[Int])]((Some(1), None)).toDF("x", "y")
+    assert(digest(nullLeft) !== digest(nullRight))
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,6 +52,30 @@ trait SparkSpec extends AnyFunSuite {
       assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job never seen")
       jobs.get
     } finally sc.removeSparkListener(l)
+  }
+
+  /** The commands of the processes this JVM starts while `body` runs,
+    * from an in-process JFR recording of `jdk.ProcessStart`. Two classes
+    * start a process once per JVM when first initialized, at a time that
+    * depends on the JVM, not on `body`: Spark's executor metrics getter
+    * (`getconf PAGESIZE`, on the first heartbeat that polls it) and
+    * Hadoop's `Shell` (`setsid`). They are initialized before recording.
+    */
+  def spawnsDuring(body: => Unit): Seq[String] = {
+    Seq("org.apache.spark.executor.ProcfsMetricsGetter$", "org.apache.hadoop.util.Shell")
+      .foreach(Class.forName(_, true, getClass.getClassLoader))
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try body finally rec.stop()
+    val file = java.nio.file.Files.createTempFile("graft-spawns", ".jfr")
+    try {
+      rec.dump(file)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq.map(_.getString("command"))
+    } finally {
+      rec.close()
+      java.nio.file.Files.delete(file)
+    }
   }
 
   def ts(iso: String): java.sql.Timestamp =
