@@ -79,7 +79,6 @@ object AnnIndex {
   def stageOnce(spark: SparkSession, dir: String): String =
     Stores.buildOnce(spark, basePath(spark, dir), "_GRAFT_ANN_OK") { base =>
     val emb = Tables.embeddings(spark, dir)
-    VectorExpressions.register(spark)
     val cent = Similarity.ivfCentroids(emb, "vec_id", "embedding", NumCells, Iters)
     cent.write.mode("overwrite").parquet(s"$base/ivf_centroids")
     // assignments derive from the STORED centroids so the index is
@@ -130,7 +129,6 @@ object AnnIndex {
         s"c${NumCells}s${NumSub}x${NumCodes}i${Iters}m${IncrMod}_incr_r1"),
       "_GRAFT_ANN_OK") { base =>
     val emb = Tables.embeddings(spark, dir).filter(incrTrainPred)
-    VectorExpressions.register(spark)
     val cent = Similarity.ivfCentroids(emb, "vec_id", "embedding", NumCells, Iters)
     cent.write.mode("overwrite").parquet(s"$base/ivf_centroids")
     val centStored = Tables.parquet(spark, s"$base/ivf_centroids")
@@ -187,7 +185,6 @@ object AnnIndex {
       new org.apache.hadoop.fs.Path(base, deltaDirName(batchPred, batchTag)),
       "_GRAFT_DELTA_OK") { delta =>
       val batch = Tables.embeddings(spark, dir).filter(batchPred)
-      VectorExpressions.register(spark)
       val centStored = Tables.parquet(spark, s"$base/ivf_centroids")
       writePostings(Similarity.assignCells(batch, centStored, "vec_id", "embedding"),
         s"$delta/ivf_postings")
@@ -260,7 +257,6 @@ object AnnIndex {
   def ivfDriftReportStaged(spark: SparkSession, dir: String,
                            batches: Seq[(Column, String)] = defaultBatches): DataFrame = {
     val base = stageIncrBase(spark, dir)
-    VectorExpressions.register(spark)
     val cent = Tables.parquet(spark, s"$base/ivf_centroids")
     val assigned = mergedArtifact(spark, dir, "ivf_postings", batches)
       .withColumn("cell", col("cell").cast("long"))
@@ -307,7 +303,6 @@ object AnnIndex {
   def hardNegativesStaged(spark: SparkSession, dir: String, queryPred: Column,
                           k: Int, nprobe: Int = Nprobe): DataFrame = {
     val base = stageOnce(spark, dir)
-    VectorExpressions.register(spark)
     val centroids = Tables.parquet(spark, s"$base/ivf_centroids")
     val postings = Tables.parquet(spark, s"$base/ivf_postings")
       .withColumn("cell", col("cell").cast("long"))
@@ -359,7 +354,6 @@ object AnnIndex {
   private def ivfServe(spark: SparkSession, dir: String, centroids: DataFrame,
                        rawPostings: DataFrame, queryPred: Column, k: Int,
                        nprobe: Int): DataFrame = {
-    VectorExpressions.register(spark)
     // the probe side casts DOWN to the store's partition-column type
     // (int, from hive directory inference) instead of casting the scan
     // side up to long: a cast on the scan's join key is an expression
@@ -406,7 +400,6 @@ object AnnIndex {
     */
   private def pqServe(spark: SparkSession, dir: String, cb: DataFrame,
                       rawCodes: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    VectorExpressions.register(spark)
     val codes = rawCodes.select(col("vec_id").as("n_id"), col("m"), col("code"))
     val qSub = Similarity.pqSubVectors(
       Tables.embeddings(spark, dir).filter(queryPred), "vec_id", "embedding", NumSub, SubDim)
@@ -438,7 +431,6 @@ object AnnIndex {
     */
   def pqReconError(spark: SparkSession, dir: String): DataFrame = {
     val base = stageOnce(spark, dir)
-    VectorExpressions.register(spark)
     val cb = Tables.parquet(spark, s"$base/pq_codebook")
     val codes = Tables.parquet(spark, s"$base/pq_codes")
     val sub = Similarity.pqSubVectors(
@@ -453,7 +445,6 @@ object AnnIndex {
     * shrink within-cell variance on a fixed assignment rule).
     */
   def pqReconErrorInline(emb: DataFrame, iters: Int): DataFrame = {
-    VectorExpressions.register(emb.sparkSession)
     val (sub, cb) = Similarity.pqTrain(emb, "vec_id", "embedding", NumSub, NumCodes, Dim, iters)
     pqMse(sub, Similarity.pqAssign(sub, cb, "vec_id"), cb)
   }
@@ -532,7 +523,6 @@ object AnnIndex {
     */
   def ivfPqReconError(spark: SparkSession, dir: String): DataFrame = {
     val base = stageOnce(spark, dir)
-    VectorExpressions.register(spark)
     val postings = Tables.parquet(spark, s"$base/ivf_postings")
     val cent = Tables.parquet(spark, s"$base/ivf_centroids")
     val resid = postings.join(broadcast(cent), Seq("cell"))
@@ -574,7 +564,6 @@ object AnnIndex {
     */
   def ivfCellStats(spark: SparkSession, dir: String): DataFrame = {
     val base = stageOnce(spark, dir)
-    VectorExpressions.register(spark)
     val postings = Tables.parquet(spark, s"$base/ivf_postings")
     Similarity.withNorm(postings, "vec_id", "embedding", passthrough = Seq("cell"))
       .groupBy(col("cell").cast("int").as("cell"))
@@ -594,7 +583,6 @@ object AnnIndex {
   def ivfPqKnnStaged(spark: SparkSession, dir: String, queryPred: Column, k: Int,
                      nprobe: Int = Nprobe): DataFrame = {
     val base = stageOnce(spark, dir)
-    VectorExpressions.register(spark)
     val centroids = Tables.parquet(spark, s"$base/ivf_centroids")
     val rcb = Tables.parquet(spark, s"$base/ivfpq_codebook")
     val cand = Tables.parquet(spark, s"$base/ivfpq_codes")
@@ -661,7 +649,6 @@ object AnnIndex {
   def semDedup(spark: SparkSession, dir: String, threshold: Double = 0.4,
                maxCellSize: Option[Int] = None): DataFrame = {
     val base = stageOnce(spark, dir)
-    VectorExpressions.register(spark)
     semDedupPairsOf(Tables.parquet(spark, s"$base/ivf_postings"), threshold, maxCellSize)
   }
 
@@ -705,7 +692,6 @@ object AnnIndex {
   def semDedupAuto(spark: SparkSession, dir: String, threshold: Double = 0.4,
                    maxCellSize: Option[Int] = None): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    VectorExpressions.register(spark)
     val n = Tables.rowCount(spark, dir, "embeddings")
     val cells = Similarity.ivfCellsFor(n)
     // sampled Lloyd (mod = 1 at gate scales — see ivfTrainSampleModFor)
@@ -758,7 +744,6 @@ object AnnIndex {
     */
   def stageAuto(spark: SparkSession, dir: String): (String, Int) = {
     val emb = Tables.embeddings(spark, dir)
-    VectorExpressions.register(spark)
     val n = Tables.rowCount(spark, dir, "embeddings")
     val cells = Similarity.ivfCellsFor(n)
     // sampled Lloyd: training cost stays LINEAR in the corpus (the sf10
@@ -823,7 +808,6 @@ object AnnIndex {
   def semDedupAutoStaged(spark: SparkSession, dir: String, threshold: Double = 0.4,
                          maxCellSize: Option[Int] = None): DataFrame = {
     val (base, _) = stageAuto(spark, dir)
-    VectorExpressions.register(spark)
     semDedupPairsOf(Tables.parquet(spark, s"$base/ivf_postings"), threshold, maxCellSize)
   }
 

@@ -198,7 +198,6 @@ object Curation {
     // compiled walk below the Generate (element i = span_idx i, so
     // posexplode's pos IS the old span_idx), and each generated row is
     // just its own small struct.
-    VectorExpressions.register(docs.sparkSession)
     // NOT persisted (r20): caching the span rows materialized ~(docs ×
     // spans) rows WITH span text — a cache write+read of the whole
     // tiled corpus — to save a recompute that is now one cheap compiled
@@ -492,7 +491,6 @@ object Curation {
     */
   private[functions] def corpusBloomRow(docs: DataFrame, benchPred: Column, textCol: String,
                                         width: Int, stride: Int): DataFrame = {
-    VectorExpressions.register(docs.sparkSession)
     val words = BloomBits / 64
     docs.filter(benchPred)
       .select(VectorExpressions.bloomDocBits(col(textCol), width, stride, BloomHashes, words).as("w"))
@@ -503,7 +501,6 @@ object Curation {
 
   def contaminationBloom(docs: DataFrame, idCol: String, textCol: String,
                          benchPred: Column, width: Int = 8, stride: Int = 4): DataFrame = {
-    VectorExpressions.register(docs.sparkSession)
     docs.filter(!benchPred)
       .crossJoin(broadcast(corpusBloomRow(docs, benchPred, textCol, width, stride)))
       .select(col(idCol),

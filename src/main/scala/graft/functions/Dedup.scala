@@ -80,7 +80,6 @@ object Dedup {
   def minhashSignaturesFromText(docs: DataFrame, idCol: String, textCol: String,
                                 numHashes: Int, width: Int = 8,
                                 stride: Int = 4): DataFrame = {
-    VectorExpressions.register(docs.sparkSession)
     docs.filter(length(col(textCol)) >= width)
       .select(col(idCol),
         VectorExpressions.minhashSlices(col(textCol), numHashes, width, stride).as("mhs"))
@@ -462,7 +461,6 @@ object Dedup {
     */
   def simhashPairsAuto(docs: DataFrame, idCol: String, textCol: String,
                        h: Int = 3): DataFrame = {
-    VectorExpressions.register(docs.sparkSession)
     val m = simhashBlocksFor(docs.count(), h)
     val sh = docs.select(col(idCol),
       VectorExpressions.simhash60(col(textCol)).as("simhash"))
@@ -807,7 +805,6 @@ object Dedup {
     // (same per-element double widening, same accumulation order), so
     // stores and oracles are unchanged. Dim mismatch fails fast inside
     // the expression — banding a prefix would be a silent wrong answer.
-    VectorExpressions.register(n.sparkSession)
     val planesFlat = Similarity.md5Hyperplanes(numPlanes, dim).flatMap(_.toSeq)
     // narrow band index (id, band, key); both self-join sides read it
     n.select(col(idCol),

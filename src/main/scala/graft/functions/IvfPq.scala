@@ -60,7 +60,6 @@ object IvfPq {
                k: Int, numCells: Int = 16, nprobe: Int = 2, numSub: Int = 8,
                numCodes: Int = 16, dim: Int = 64, iters: Int = 1): DataFrame = {
     val subDim = dim / numSub
-    VectorExpressions.register(emb.sparkSession)
     val cent = Similarity.ivfCentroids(emb, idCol, vecCol, numCells, iters).persist()
     val resid = residuals(emb, cent, idCol, vecCol).persist()
     val (rsub, rcb) = Similarity.pqTrain(resid, idCol, "rv", numSub, numCodes, dim, iters)

@@ -98,7 +98,6 @@ object Similarity {
     */
   def withNorm(emb: DataFrame, idCol: String, vecCol: String,
                passthrough: Seq[String] = Nil): DataFrame = {
-    VectorExpressions.register(emb.sparkSession)
     emb.select(col(idCol) +: col(vecCol).as("v") +: passthrough.map(col): _*)
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
   }
@@ -342,7 +341,6 @@ object Similarity {
     */
   def lshBuckets(emb: DataFrame, idCol: String, vecCol: String,
                  numPlanes: Int, dim: Int = 64): DataFrame = {
-    VectorExpressions.register(emb.sparkSession)
     // md5-derived planes: identical runtime cost (driver-side literals
     // either way) and the bucket assignment becomes engine-portable, so
     // knn_lsh carries a full DuckDB oracle
@@ -414,7 +412,6 @@ object Similarity {
   def ivfCentroids(emb: DataFrame, idCol: String, vecCol: String, numCells: Int,
                    iters: Int = 1): DataFrame = {
     require(iters >= 1, "ivfCentroids: need at least one Lloyd iteration")
-    VectorExpressions.register(emb.sparkSession) // vector_dot used below
     // seeds: first numCells vectors by id; cell id = seed vec id
     var cent = emb.orderBy(col(idCol)).limit(numCells)
       .select(col(idCol).as("cell"), col(vecCol).as("cv"))
@@ -447,7 +444,6 @@ object Similarity {
     */
   private[graft] def assignCells(emb: DataFrame, centroids: DataFrame,
                                      idCol: String, vecCol: String): DataFrame = {
-    VectorExpressions.register(emb.sparkSession)
     val e = widenToSession(withNorm(emb, idCol, vecCol), emb)
     val c = centroids.withColumn("cnrm", sqrt(dot(col("cv"), col("cv"))))
     val scored = e.crossJoin(broadcast(c))
@@ -511,7 +507,6 @@ object Similarity {
       branchProbe: Int): (DataFrame, DataFrame) = {
     require(branches >= 1 && branchProbe >= 1,
       "assignCellsHier: branches and branchProbe must be >= 1")
-    VectorExpressions.register(emb.sparkSession)
     // level 1: cluster the centroids (tiny frame, 2 Lloyd iterations)
     val cseed = centroids.select(col("cell").as("c_id"), col("cv").as("c_vec"))
     val bcent = ivfCentroids(cseed, "c_id", "c_vec", branches, iters = 2)
@@ -694,7 +689,6 @@ object Similarity {
   def ivfDriftReport(emb: DataFrame, trainPred: Column, newPred: Column,
                      idCol: String, vecCol: String,
                      numCells: Int = 16, iters: Int = 1): DataFrame = {
-    VectorExpressions.register(emb.sparkSession)
     val cent = ivfCentroids(emb.filter(trainPred), idCol, vecCol, numCells, iters)
     val assigned = assignCells(emb, cent, idCol, vecCol)
     driftAggregate(assigned, cent, newPred, idCol, vecCol)
@@ -988,7 +982,6 @@ object Similarity {
     * for 16 M slices — measured as the bulk of the PQ family's cost).
     */
   private[graft] def pqAssign(sub: DataFrame, codebook: DataFrame, idCol: String): DataFrame = {
-    VectorExpressions.register(sub.sparkSession)
     // sorted by (m, code): the expression's tie-break contract
     val cbRow = codebook
       .select(col("m").cast("int").as("m"), col("code").cast("int").as("code"), col("cv"))
@@ -1026,7 +1019,6 @@ object Similarity {
     require(dim % numSub == 0, s"dim $dim must split evenly into $numSub subspaces")
     require(iters >= 1, "pqTrain: need at least one Lloyd iteration")
     val subDim = dim / numSub
-    VectorExpressions.register(emb.sparkSession)
     // slices feed seeding, every assignment pass, and the Lloyd steps
     val sub = pqSubVectors(emb, idCol, vecCol, numSub, subDim).persist()
     val seedIds = emb.orderBy(col(idCol)).limit(numCodes)

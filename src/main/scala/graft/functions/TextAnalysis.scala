@@ -66,7 +66,6 @@ object TextAnalysis {
     // re-split and re-scanned the text — [[LangMarkerCounts]] computes
     // all five counters in ONE compiled walk; the argmax/tie-break
     // Column arithmetic over them is unchanged.
-    VectorExpressions.register(docs.sparkSession)
     val withCounts = docs.select(col(idCol), col(textCol))
       .withColumn("__lmc",
         VectorExpressions.langMarkerCounts(col(textCol), langMarkers.map(_._2)))
@@ -107,7 +106,6 @@ object TextAnalysis {
     * stay as the same Column arithmetic over the counters.
     */
   def qualityScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    VectorExpressions.register(docs.sparkSession)
     val st = VectorExpressions.textStats(col(textCol), langMarkers.head._2)
     docs.select(col(idCol), st.as("st"))
       .select(
@@ -139,7 +137,6 @@ object TextAnalysis {
     // r20: split + regexp_count → [[TokenizeCounts]], both counters in
     // one compiled byte walk (the regex engine dominated the 40.7 s
     // sf100 entry; parity contract in the expression scaladoc).
-    VectorExpressions.register(docs.sparkSession)
     docs.select(col(idCol), VectorExpressions.tokenizeCounts(col(textCol)).as("tc"))
       .select(col(idCol), col("tc.ws_tokens").as("ws_tokens"),
         col("tc.re_tokens").as("re_tokens"))
@@ -173,7 +170,6 @@ object TextAnalysis {
     // |distinct (doc, tok)| rows and the per-doc sums weight by `c`.
     // freq = Σ c per token (was count(*) over occurrences) — identical
     // integers, and the scored sums stay exact.
-    VectorExpressions.register(docs.sparkSession)
     val toks = docs.select(col(idCol),
         explode(VectorExpressions.tokenCounts(col(textCol))).as("tc"))
       .select(col(idCol), col("tc.tok").as("tok"), col("tc.cnt").as("c"))
@@ -229,7 +225,6 @@ object TextAnalysis {
     // joins probe |distinct (doc, bigram)| rows and the per-doc sums
     // weight by `c` — the same exact integers, fewer rows everywhere.
     // bg_freq = Σ c per bigram (was count(*) over occurrences).
-    VectorExpressions.register(docs.sparkSession)
     val bg = docs.select(col(idCol),
         explode(VectorExpressions.bigramCounts(col(textCol))).as("bc"))
       .select(col(idCol), col("bc.bigram").as("bigram"), col("bc.cnt").as("c"))
@@ -286,7 +281,6 @@ object TextAnalysis {
     // grain in one compiled pass (code-point stepping = substring
     // semantics; null = no token with ≥ 2 chars), so the Generate emits
     // per-doc-distinct pairs and the global count is Σ of weights.
-    VectorExpressions.register(docs.sparkSession)
     docs.select(explode(VectorExpressions.bpePairCounts(col(textCol))).as("pc"))
       .groupBy(col("pc.pair").as("pair")).agg(sum(col("pc.cnt")).as("cnt"))
       .orderBy(col("cnt").desc, col("pair").asc)
@@ -353,7 +347,6 @@ object TextAnalysis {
     // every occurrence (freq = Σ per-doc counts — identical integers).
     // Shared by the whole BPE family (train/vocab/encode, batched
     // twins): every one of those qkeys pays this pass first.
-    VectorExpressions.register(docs.sparkSession)
     docs.select(explode(VectorExpressions.tokenCounts(col(textCol))).as("tc"))
       .select(col("tc.tok").as("tok"), col("tc.cnt").as("c"))
       .filter(length(col("tok")) >= 1)
@@ -748,7 +741,6 @@ object TextAnalysis {
     // ([[TokenCounts]]) instead of every occurrence; per-doc stats
     // weight by `c` — identical integers (inner-join drop semantics for
     // out-of-vocab tokens are grain-independent).
-    VectorExpressions.register(docs.sparkSession)
     val words = docs.select(col(idCol),
         explode(VectorExpressions.tokenCounts(col(textCol))).as("tc"))
       .select(col(idCol), col("tc.tok").as("tok"), col("tc.cnt").as("c"))
@@ -790,7 +782,6 @@ object TextAnalysis {
     // duplicate-insensitive, so walk order is irrelevant; docs shorter
     // than the shingle width get the expression's null = the old left
     // join's missing-row null.
-    VectorExpressions.register(docs.sparkSession)
     docs.select(col(idCol), md5(col(textCol)).as("fp_full"),
       VectorExpressions.minShingleMd5(col(textCol), 8, 4).as("fp_min"))
   }
@@ -810,7 +801,6 @@ object TextAnalysis {
     VectorExpressions.normalizeText(textCol) // compiled single pass; bit-parity contract in [[NormalizeText]]
 
   def normalizedHash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    VectorExpressions.register(docs.sparkSession)
     docs.select(col(idCol), md5(normalize(col(textCol))).as("norm_hash"))
   }
 
@@ -827,7 +817,6 @@ object TextAnalysis {
     // r20: occurrence-grain bigram explode → [[BigramCounts]] map grain
     // (one compiled pass per doc; null = the size(w) >= 2 filter); the
     // global count becomes Σ of per-doc weights — identical integers.
-    VectorExpressions.register(docs.sparkSession)
     docs.select(explode(VectorExpressions.bigramCounts(col(textCol))).as("bc"))
       .groupBy(col("bc.bigram").as("bigram")).agg(sum(col("bc.cnt")).as("cnt"))
       .orderBy(col("cnt").desc, col("bigram").asc)
@@ -860,7 +849,6 @@ object TextAnalysis {
     // the corpus-token explode AND the (doc, term) hash-aggregate
     // exchange that produced the same frame.
     // tf feeds the df aggregation AND the scored join → persist
-    VectorExpressions.register(docs.sparkSession)
     val tf = docs.select(col(idCol),
         explode(VectorExpressions.tokenCounts(col(textCol))).as("tc"))
       .select(col(idCol), col("tc.tok").as("term"), col("tc.cnt").as("tf"))
@@ -1052,7 +1040,6 @@ object TextAnalysis {
     // per-doc aggregates and a join back to the corpus (110.3 s at
     // sf100, paid AGAIN inside quality_filter). The when() reproduces
     // the old null-left-join → coalesce(…, 0.0) for sub-2-token docs.
-    VectorExpressions.register(docs.sparkSession)
     docs.select(col(idCol), VectorExpressions.repetitionStats(col(textCol)).as("st"))
       .select(col(idCol),
         col("st.n_words").as("n_words"),
@@ -1095,7 +1082,6 @@ object TextAnalysis {
     // and the no-backtracking argument in its scaladoc; CurationSpec
     // pins the expression against this exact composition). The md5 stays
     // the same built-in Column it always was.
-    VectorExpressions.register(docs.sparkSession)
     docs.select(col(idCol),
         VectorExpressions.piiScrubStats(col(textCol)).as("ps"))
       .select(col(idCol),
@@ -1124,9 +1110,7 @@ object TextAnalysis {
     // r20: counts come off ONE compiled [[LangMarkerCounts]] walk (the
     // element_at probes over the same subtree CSE into a single
     // evaluation under whole-stage codegen) instead of five
-    // split+filter subexpressions. Callers must have run
-    // VectorExpressions.register on the session (every registered
-    // consumer does).
+    // split+filter subexpressions.
     val lmc = VectorExpressions.langMarkerCounts(textCol, langMarkers.map(_._2))
     val counts = langMarkers.map(_._1).zipWithIndex.map {
       case (l, i) => l -> element_at(lmc, i + 1) }.toMap
@@ -1149,7 +1133,6 @@ object TextAnalysis {
     * per-doc scalars.
     */
   def qualityFilter(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    VectorExpressions.register(docs.sparkSession) // langPred's compiled counts
     val rep = docRepetition(docs, idCol, textCol)
       .select(col(idCol).as("r_id"), col("n_words"), col("distinct_ratio"), col("top_bigram_frac"))
     docs.select(col(idCol), langPred(col(textCol)).as("lang_pred"))
@@ -1242,7 +1225,6 @@ object TextAnalysis {
     * partition is one duplicate group (tiny); no global sort anywhere.
     */
   def dedupKeepBest(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    VectorExpressions.register(docs.sparkSession)
     val slim = docs.select(col(idCol), md5(normalize(col(textCol))).as("nh"),
       length(col(textCol)).cast("long").as("doc_len"))
     val grp = Window.partitionBy(col("nh"))
@@ -1503,7 +1485,6 @@ object TextAnalysis {
     require(maxBits >= 64 && Integer.bitCount(maxBits) == 1,
       s"contaminationCheck: maxBits ($maxBits) must be a power of two >= 64")
     val spark = docs.sparkSession
-    VectorExpressions.register(spark)
     val k = Curation.BloomHashes
     val bench = docs.filter(benchPred)
       .select(explode(VectorExpressions.distinctShingles(
@@ -1590,7 +1571,6 @@ object TextAnalysis {
     // r20: same seam as tfidfTopTerms — (doc, term, tf) straight from
     // [[TokenCounts]]'s compiled pass (empty-token filter kept), no
     // corpus-token explode, no (doc, term) aggregate exchange.
-    VectorExpressions.register(docs.sparkSession)
     val tf = docs.select(col(idCol),
         explode(VectorExpressions.tokenCounts(col(textCol))).as("tc"))
       .select(col(idCol), col("tc.tok").as("term"), col("tc.cnt").as("tf"))
@@ -1635,7 +1615,6 @@ object TextAnalysis {
     */
   def dupRatioBySource(docs: DataFrame, idCol: String, textCol: String,
                        sourceCol: String): DataFrame = {
-    VectorExpressions.register(docs.sparkSession)
     // Aggregate to (hash, source) counts BEFORE anything is consumed
     // twice: the persisted frame holds 32-byte hashes and counts, never
     // text, and the corpus scan runs exactly once.

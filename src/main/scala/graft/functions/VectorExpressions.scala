@@ -329,488 +329,249 @@ object PqAssignCode {
   }
 }
 
+/** Column handles for graft's custom expressions, and the catalog that
+  * makes the same expressions callable from SQL text.
+  *
+  * A handle builds its expression directly, so building a DataFrame
+  * neither reads nor writes the session's function registry: a session
+  * that binds another function to one of these names still gets graft's
+  * semantics from graft's operators.
+  */
 object VectorExpressions {
-  /** Column-API handle for [[VectorDotProduct]]. Spark 4's Column no longer
-    * exposes the catalyst expression directly, so the handle goes through
-    * the function registry: call [[register]] on the session first (every
-    * engine entry point that scores vectors does).
-    */
+  import org.apache.spark.sql.GraftColumns.{column, expression => expr}
+
+  /** Column handle for [[VectorDotProduct]]. */
   def vectorDot(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("vector_dot", a, b)
+    column(VectorDotProduct(expr(a), expr(b)))
 
-  /** Idempotent registration; also makes `vector_dot(a, b)` available in
-    * spark.sql text queries. Guarded on an existing entry so repeated
-    * defensive calls from operators don't spam
-    * "replaced a previously registered function" warnings.
-    *
-    * The guard means register() DEFERS to whatever `vector_dot` is already
-    * in the session registry — fine for the expected cases (this function,
-    * or the identical one injected by [[GraftExtensions]]), but a session
-    * that pre-registered a different `vector_dot` keeps its own semantics;
-    * the engine's operators never re-assert theirs. Callers needing a
-    * guarantee should wire [[GraftExtensions]] at session build.
+  /** Column handle for [[VectorSignBands]]. */
+  def vectorSignBands(v: Column, planesFlat: Seq[Float], dim: Int, bitsPerBand: Int): Column =
+    column(VectorSignBands(expr(v), planesFlat, dim, bitsPerBand))
+
+  /** Column handle for [[MinHashSlices]]. */
+  def minhashSlices(text: Column, numHashes: Int, width: Int, stride: Int): Column =
+    column(MinHashSlices(expr(text), numHashes, width, stride))
+
+  /** Column handle for [[SimHash60]]. */
+  def simhash60(text: Column): Column = column(SimHash60(expr(text)))
+
+  /** Column handle for [[TextStats]]. */
+  def textStats(text: Column, markers: Seq[String]): Column =
+    column(TextStats(expr(text), markers))
+
+  /** Column handle for [[NormalizeText]]. */
+  def normalizeText(text: Column): Column = column(NormalizeText(expr(text)))
+
+  /** Column handle for [[BloomPositions]]. */
+  def bloomPositions(sh: Column, hashes: Int): Column =
+    column(BloomPositions(expr(sh), hashes))
+
+  /** Column handle for [[BloomMember]]. */
+  def bloomMember(sh: Column, words: Column, hashes: Int): Column =
+    column(BloomMember(expr(sh), expr(words), hashes))
+
+  /** Column handle for [[BloomDocBits]]. */
+  def bloomDocBits(text: Column, width: Int, stride: Int, hashes: Int, words: Int): Column =
+    column(BloomDocBits(expr(text), width, stride, hashes, words))
+
+  /** Column handle for [[BloomFlagCount]]. */
+  def bloomFlagCount(text: Column, bloomWords: Column, width: Int, stride: Int, hashes: Int): Column =
+    column(BloomFlagCount(expr(text), expr(bloomWords), width, stride, hashes))
+
+  /** Column handle for [[BloomFlaggedShingles]]. */
+  def bloomFlaggedShingles(text: Column, bloomWords: Column, width: Int, stride: Int, hashes: Int): Column =
+    column(BloomFlaggedShingles(expr(text), expr(bloomWords), width, stride, hashes))
+
+  /** Column handle for [[MinShingleMd5]]. */
+  def minShingleMd5(text: Column, width: Int, stride: Int): Column =
+    column(MinShingleMd5(expr(text), width, stride))
+
+  /** Column handle for [[RepetitionStats]]. */
+  def repetitionStats(text: Column): Column = column(RepetitionStats(expr(text)))
+
+  /** Column handle for [[PqAssignCode]]. `constantArray`: `cbs` is the
+    * same on every row of a task ([[ArrayMemo]]).
     */
-  def register(spark: SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("vector_dot")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vector_dot", exprs => VectorDotProduct(exprs(0), exprs(1)), "built-in")
-    }
-    val sb = org.apache.spark.sql.catalyst.FunctionIdentifier("vector_sign_bands")
-    if (!spark.sessionState.functionRegistry.functionExists(sb)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vector_sign_bands", signBandsFromExprs, "built-in")
-    }
-    val mh = org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_slices")
-    if (!spark.sessionState.functionRegistry.functionExists(mh)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_slices", minHashFromExprs, "built-in")
-    }
-    val sh = org.apache.spark.sql.catalyst.FunctionIdentifier("simhash60")
-    if (!spark.sessionState.functionRegistry.functionExists(sh)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash60", exprs => SimHash60(exprs.head), "built-in")
-    }
-    val ts = org.apache.spark.sql.catalyst.FunctionIdentifier("text_stats")
-    if (!spark.sessionState.functionRegistry.functionExists(ts)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "text_stats", textStatsFromExprs, "built-in")
-    }
-    val nt = org.apache.spark.sql.catalyst.FunctionIdentifier("normalize_text")
-    if (!spark.sessionState.functionRegistry.functionExists(nt)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "normalize_text", exprs => NormalizeText(exprs.head), "built-in")
-    }
-    val bp = org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_positions")
-    if (!spark.sessionState.functionRegistry.functionExists(bp)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bloom_positions", exprs => intLitArg(exprs, 2, "bloom_positions(sh, hashes)")(
-          k => BloomPositions(exprs.head, k)), "built-in")
-    }
-    val bm = org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_member")
-    if (!spark.sessionState.functionRegistry.functionExists(bm)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bloom_member", exprs => intLitArg(exprs, 3, "bloom_member(sh, words, hashes)")(
-          k => BloomMember(exprs(0), exprs(1), k)), "built-in")
-    }
-    val bd = org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_doc_bits")
-    if (!spark.sessionState.functionRegistry.functionExists(bd)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bloom_doc_bits", exprs => {
-          require(exprs.length == 5, "bloom_doc_bits(text, width, stride, hashes, words) takes 5 arguments")
-          val sig = "bloom_doc_bits geometry"
-          BloomDocBits(exprs.head, intLit(exprs(1), sig), intLit(exprs(2), sig),
-            intLit(exprs(3), sig), intLit(exprs(4), sig))
-        }, "built-in")
-    }
-    val bf = org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_flag_count")
-    if (!spark.sessionState.functionRegistry.functionExists(bf)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bloom_flag_count", exprs => {
-          require(exprs.length == 5, "bloom_flag_count(text, words, width, stride, hashes) takes 5 arguments")
-          val sig = "bloom_flag_count geometry"
-          BloomFlagCount(exprs(0), exprs(1), intLit(exprs(2), sig),
-            intLit(exprs(3), sig), intLit(exprs(4), sig))
-        }, "built-in")
-    }
-    val bfs = org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_flagged_shingles")
-    if (!spark.sessionState.functionRegistry.functionExists(bfs)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bloom_flagged_shingles", exprs => {
-          require(exprs.length == 5, "bloom_flagged_shingles(text, words, width, stride, hashes) takes 5 arguments")
-          val sig = "bloom_flagged_shingles geometry"
-          BloomFlaggedShingles(exprs(0), exprs(1), intLit(exprs(2), sig),
-            intLit(exprs(3), sig), intLit(exprs(4), sig))
-        }, "built-in")
-    }
-    val msm = org.apache.spark.sql.catalyst.FunctionIdentifier("min_shingle_md5")
-    if (!spark.sessionState.functionRegistry.functionExists(msm)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "min_shingle_md5", exprs => {
-          require(exprs.length == 3, "min_shingle_md5(text, width, stride) takes 3 arguments")
-          val sig = "min_shingle_md5 geometry"
-          MinShingleMd5(exprs.head, intLit(exprs(1), sig), intLit(exprs(2), sig))
-        }, "built-in")
-    }
-    val rs = org.apache.spark.sql.catalyst.FunctionIdentifier("repetition_stats")
-    if (!spark.sessionState.functionRegistry.functionExists(rs)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "repetition_stats", exprs => RepetitionStats(exprs.head), "built-in")
-    }
-    val pac = org.apache.spark.sql.catalyst.FunctionIdentifier("pq_assign_code")
-    if (!spark.sessionState.functionRegistry.functionExists(pac)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "pq_assign_code", exprs =>
-          PqAssignCode(exprs(0), exprs(1), exprs(2),
-            constantArrayArg(exprs, 3, "pq_assign_code(sv, m, cbs[, constant_array])")),
-        "built-in")
-    }
-    val bgc = org.apache.spark.sql.catalyst.FunctionIdentifier("bigram_counts")
-    if (!spark.sessionState.functionRegistry.functionExists(bgc)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bigram_counts", exprs => BigramCounts(exprs.head), "built-in")
-    }
-    val tkc = org.apache.spark.sql.catalyst.FunctionIdentifier("token_counts")
-    if (!spark.sessionState.functionRegistry.functionExists(tkc)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "token_counts", exprs => TokenCounts(exprs.head), "built-in")
-    }
-    val bpc = org.apache.spark.sql.catalyst.FunctionIdentifier("bpe_pair_counts")
-    if (!spark.sessionState.functionRegistry.functionExists(bpc)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bpe_pair_counts", exprs => BpePairCounts(exprs.head), "built-in")
-    }
-    val spt = org.apache.spark.sql.catalyst.FunctionIdentifier("span_tiles")
-    if (!spark.sessionState.functionRegistry.functionExists(spt)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "span_tiles", exprs => intLitArg(exprs, 2, "span_tiles(text, spanTokens)")(
-          k => SpanTiles(exprs.head, k)), "built-in")
-    }
-    val dsh = org.apache.spark.sql.catalyst.FunctionIdentifier("distinct_shingles")
-    if (!spark.sessionState.functionRegistry.functionExists(dsh)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "distinct_shingles", exprs => {
-          require(exprs.length == 3, "distinct_shingles(text, width, stride) takes 3 arguments")
-          val sig = "distinct_shingles geometry"
-          DistinctShingles(exprs.head, intLit(exprs(1), sig), intLit(exprs(2), sig))
-        }, "built-in")
-    }
-    val tzc = org.apache.spark.sql.catalyst.FunctionIdentifier("tokenize_counts")
-    if (!spark.sessionState.functionRegistry.functionExists(tzc)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "tokenize_counts", exprs => TokenizeCounts(exprs.head), "built-in")
-    }
-    val lmc = org.apache.spark.sql.catalyst.FunctionIdentifier("lang_marker_counts")
-    if (!spark.sessionState.functionRegistry.functionExists(lmc)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "lang_marker_counts", langMarkerCountsFromExprs, "built-in")
-    }
-    val pss = org.apache.spark.sql.catalyst.FunctionIdentifier("pii_scrub_stats")
-    if (!spark.sessionState.functionRegistry.functionExists(pss)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "pii_scrub_stats", exprs => PiiScrubStats(exprs.head), "built-in")
-    }
-    val wbp = org.apache.spark.sql.catalyst.FunctionIdentifier("wide_bloom_positions")
-    if (!spark.sessionState.functionRegistry.functionExists(wbp)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "wide_bloom_positions", exprs => {
-          require(exprs.length == 3, "wide_bloom_positions(sh, hashes, bits) takes 3 arguments")
-          val sig = "wide_bloom_positions geometry"
-          WideBloomPositions(exprs.head, intLit(exprs(1), sig), intLit(exprs(2), sig))
-        }, "built-in")
-    }
-    val jfl = org.apache.spark.sql.catalyst.FunctionIdentifier("json_fast_long")
-    if (!spark.sessionState.functionRegistry.functionExists(jfl)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "json_fast_long", exprs => {
-          import org.apache.spark.sql.catalyst.expressions.Literal
-          require(exprs.length == 2, "json_fast_long(json, field) takes 2 arguments")
-          val fld = exprs(1) match {
-            case Literal(s: org.apache.spark.unsafe.types.UTF8String, StringType) => s.toString
-            case other => throw new IllegalArgumentException(
-              s"json_fast_long: field must be a string literal, got $other")
-          }
-          JsonFastLong(exprs(0), fld)
-        }, "built-in")
-    }
-    val ssc = org.apache.spark.sql.catalyst.FunctionIdentifier("shared_shingle_count")
-    if (!spark.sessionState.functionRegistry.functionExists(ssc)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "shared_shingle_count", exprs => {
-          val constant = constantArrayArg(exprs, 4,
-            "shared_shingle_count(text, shingles, width, stride[, constant_array])")
-          val sig = "shared_shingle_count geometry"
-          SharedShingleCount(exprs(0), exprs(1), intLit(exprs(2), sig), intLit(exprs(3), sig),
-            constant)
-        }, "built-in")
-    }
-    val wbf = org.apache.spark.sql.catalyst.FunctionIdentifier("wide_bloom_flagged_shingles")
-    if (!spark.sessionState.functionRegistry.functionExists(wbf)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "wide_bloom_flagged_shingles", exprs => {
-          val constant = constantArrayArg(exprs, 5,
-            "wide_bloom_flagged_shingles(text, words, width, stride, hashes[, constant_array])")
-          val sig = "wide_bloom_flagged_shingles geometry"
-          WideBloomFlaggedShingles(exprs(0), exprs(1), intLit(exprs(2), sig),
-            intLit(exprs(3), sig), intLit(exprs(4), sig), constant)
-        }, "built-in")
-    }
-  }
+  def pqAssignCode(sv: Column, m: Column, cbs: Column, constantArray: Boolean): Column =
+    column(PqAssignCode(expr(sv), expr(m), expr(cbs), constantArray))
 
-  /** Column-API handle for [[TokenizeCounts]] (see [[register]]). */
-  def tokenizeCounts(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("tokenize_counts", text)
+  /** Column handle for [[BigramCounts]]. */
+  def bigramCounts(text: Column): Column = column(BigramCounts(expr(text)))
 
-  /** Column-API handle for [[LangMarkerCounts]] (see [[register]]): each
-    * marker set travels as ONE space-joined literal string (markers are
-    * ASCII and space-free, so the join is unambiguous).
+  /** Column handle for [[TokenCounts]]. */
+  def tokenCounts(text: Column): Column = column(TokenCounts(expr(text)))
+
+  /** Column handle for [[BpePairCounts]]. */
+  def bpePairCounts(text: Column): Column = column(BpePairCounts(expr(text)))
+
+  /** Column handle for [[SpanTiles]]. */
+  def spanTiles(text: Column, spanTokens: Int): Column =
+    column(SpanTiles(expr(text), spanTokens))
+
+  /** Column handle for [[DistinctShingles]]. */
+  def distinctShingles(text: Column, width: Int, stride: Int): Column =
+    column(DistinctShingles(expr(text), width, stride))
+
+  /** Column handle for [[TokenizeCounts]]. */
+  def tokenizeCounts(text: Column): Column = column(TokenizeCounts(expr(text)))
+
+  /** Column handle for [[LangMarkerCounts]]. Each set becomes the
+    * `ArraySeq` the SQL builder decodes, so a plan prints the same either way.
     */
   def langMarkerCounts(text: Column, sets: Seq[Seq[String]]): Column =
-    org.apache.spark.sql.functions.call_function("lang_marker_counts",
-      text, org.apache.spark.sql.functions.typedLit(sets.map(_.mkString(" "))))
+    column(LangMarkerCounts(expr(text), sets.map(_.toArray.toSeq)))
 
-  /** Registry/extension constructor — marker sets are part of the
-    * operator's identity, so they must arrive as a string-array literal
-    * (one space-joined entry per language).
-    */
-  private[functions] def langMarkerCountsFromExprs(exprs: Seq[Expression]): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    require(exprs.length == 2, "lang_marker_counts(text, sets) takes 2 arguments")
-    val sets = exprs(1) match {
-      case Literal(a: org.apache.spark.sql.catalyst.util.ArrayData, ArrayType(StringType, _)) =>
-        a.toObjectArray(StringType)
-          .map(_.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString.split(" ").toSeq).toSeq
-      case other => throw new IllegalArgumentException(
-        s"lang_marker_counts: sets must be a string-array literal, got $other")
-    }
-    LangMarkerCounts(exprs(0), sets)
-  }
+  /** Column handle for [[PiiScrubStats]]. */
+  def piiScrubStats(text: Column): Column = column(PiiScrubStats(expr(text)))
 
-  /** Column-API handle for [[PiiScrubStats]] (see [[register]]). */
-  def piiScrubStats(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("pii_scrub_stats", text)
+  /** Column handle for [[WideBloomPositions]]. */
+  def wideBloomPositions(sh: Column, hashes: Int, bits: Int): Column =
+    column(WideBloomPositions(expr(sh), hashes, bits))
 
-  /** Column-API handle for [[JsonFastLong]] (see [[register]]). */
+  /** Column handle for [[JsonFastLong]]. */
   def jsonFastLong(json: Column, field: String): Column =
-    org.apache.spark.sql.functions.call_function("json_fast_long",
-      json, org.apache.spark.sql.functions.lit(field))
+    column(JsonFastLong(expr(json), field))
 
-  /** Column-API handle for [[SharedShingleCount]] (see [[register]]).
-    * `constantArray`: `shingles` is the same on every row of a task
-    * ([[ArrayMemo]]).
+  /** Column handle for [[SharedShingleCount]]. `constantArray`:
+    * `shingles` is the same on every row of a task ([[ArrayMemo]]).
     */
   def sharedShingleCount(text: Column, shingles: Column, width: Int, stride: Int,
                          constantArray: Boolean): Column =
-    org.apache.spark.sql.functions.call_function("shared_shingle_count",
-      text, shingles, org.apache.spark.sql.functions.lit(width),
-      org.apache.spark.sql.functions.lit(stride), org.apache.spark.sql.functions.lit(constantArray))
+    column(SharedShingleCount(expr(text), expr(shingles), width, stride, constantArray))
 
-  /** Column-API handle for [[WideBloomPositions]] (see [[register]]). */
-  def wideBloomPositions(sh: Column, hashes: Int, bits: Int): Column =
-    org.apache.spark.sql.functions.call_function("wide_bloom_positions",
-      sh, org.apache.spark.sql.functions.lit(hashes), org.apache.spark.sql.functions.lit(bits))
-
-  /** Column-API handle for [[WideBloomFlaggedShingles]] (see [[register]]).
-    * `constantArray`: `bloomWords` is the same on every row of a task
-    * ([[ArrayMemo]]).
+  /** Column handle for [[WideBloomFlaggedShingles]]. `constantArray`:
+    * `bloomWords` is the same on every row of a task ([[ArrayMemo]]).
     */
   def wideBloomFlaggedShingles(text: Column, bloomWords: Column, width: Int,
                                stride: Int, hashes: Int, constantArray: Boolean): Column =
-    org.apache.spark.sql.functions.call_function("wide_bloom_flagged_shingles",
-      text, bloomWords, org.apache.spark.sql.functions.lit(width),
-      org.apache.spark.sql.functions.lit(stride), org.apache.spark.sql.functions.lit(hashes),
-      org.apache.spark.sql.functions.lit(constantArray))
+    column(WideBloomFlaggedShingles(expr(text), expr(bloomWords), width, stride, hashes,
+      constantArray))
 
-  /** Column-API handle for [[BigramCounts]] (see [[register]]). */
-  def bigramCounts(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("bigram_counts", text)
-
-  /** Column-API handle for [[TokenCounts]] (see [[register]]). */
-  def tokenCounts(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("token_counts", text)
-
-  /** Column-API handle for [[BpePairCounts]] (see [[register]]). */
-  def bpePairCounts(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("bpe_pair_counts", text)
-
-  /** Column-API handle for [[SpanTiles]] (see [[register]]). */
-  def spanTiles(text: Column, spanTokens: Int): Column =
-    org.apache.spark.sql.functions.call_function("span_tiles",
-      text, org.apache.spark.sql.functions.lit(spanTokens))
-
-  /** Column-API handle for [[DistinctShingles]] (see [[register]]). */
-  def distinctShingles(text: Column, width: Int, stride: Int): Column =
-    org.apache.spark.sql.functions.call_function("distinct_shingles",
-      text, org.apache.spark.sql.functions.lit(width), org.apache.spark.sql.functions.lit(stride))
-
-  /** Column-API handle for [[PqAssignCode]] (see [[register]]).
-    * `constantArray`: `cbs` is the same on every row of a task
-    * ([[ArrayMemo]]).
+  /** The SQL spelling of every handle above, one row each: its signature
+    * and the builder from the call's arguments. Geometry, marker sets and
+    * planes are part of an operator's identity, so they must be literals;
+    * `constant_array` is the optional trailing flag of [[ArrayMemo]].
+    * [[register]] and [[GraftExtensions]] both read this table.
     */
-  def pqAssignCode(sv: Column, m: Column, cbs: Column, constantArray: Boolean): Column =
-    org.apache.spark.sql.functions.call_function("pq_assign_code", sv, m, cbs,
-      org.apache.spark.sql.functions.lit(constantArray))
+  val catalog: Seq[SqlFunction[_ <: Expression]] = Seq(
+    new SqlFunction("vector_dot(a, b)")(a => VectorDotProduct(a(0), a(1))),
+    new SqlFunction("vector_sign_bands(vec, planesFlat, dim, bitsPerBand)")(a =>
+      VectorSignBands(a(0), a.floats(1), a.int(2), a.int(3))),
+    new SqlFunction("minhash_slices(text, numHashes, width, stride)")(a =>
+      MinHashSlices(a(0), a.int(1), a.int(2), a.int(3))),
+    new SqlFunction("simhash60(text)")(a => SimHash60(a(0))),
+    new SqlFunction("text_stats(text, markers)")(a => TextStats(a(0), a.strings(1))),
+    new SqlFunction("normalize_text(text)")(a => NormalizeText(a(0))),
+    new SqlFunction("bloom_positions(sh, hashes)")(a => BloomPositions(a(0), a.int(1))),
+    new SqlFunction("bloom_member(sh, words, hashes)")(a => BloomMember(a(0), a(1), a.int(2))),
+    new SqlFunction("bloom_doc_bits(text, width, stride, hashes, words)")(a =>
+      BloomDocBits(a(0), a.int(1), a.int(2), a.int(3), a.int(4))),
+    new SqlFunction("bloom_flag_count(text, words, width, stride, hashes)")(a =>
+      BloomFlagCount(a(0), a(1), a.int(2), a.int(3), a.int(4))),
+    new SqlFunction("bloom_flagged_shingles(text, words, width, stride, hashes)")(a =>
+      BloomFlaggedShingles(a(0), a(1), a.int(2), a.int(3), a.int(4))),
+    new SqlFunction("min_shingle_md5(text, width, stride)")(a =>
+      MinShingleMd5(a(0), a.int(1), a.int(2))),
+    new SqlFunction("repetition_stats(text)")(a => RepetitionStats(a(0))),
+    new SqlFunction("pq_assign_code(sv, m, cbs, [constant_array])")(a =>
+      PqAssignCode(a(0), a(1), a(2), a.flag(3))),
+    new SqlFunction("bigram_counts(text)")(a => BigramCounts(a(0))),
+    new SqlFunction("token_counts(text)")(a => TokenCounts(a(0))),
+    new SqlFunction("bpe_pair_counts(text)")(a => BpePairCounts(a(0))),
+    new SqlFunction("span_tiles(text, spanTokens)")(a => SpanTiles(a(0), a.int(1))),
+    new SqlFunction("distinct_shingles(text, width, stride)")(a =>
+      DistinctShingles(a(0), a.int(1), a.int(2))),
+    new SqlFunction("tokenize_counts(text)")(a => TokenizeCounts(a(0))),
+    // one space-joined marker string per language (markers are ASCII and
+    // space-free, so the join is unambiguous)
+    new SqlFunction("lang_marker_counts(text, sets)")(a =>
+      LangMarkerCounts(a(0), a.strings(1).map(_.split(" ").toSeq))),
+    new SqlFunction("pii_scrub_stats(text)")(a => PiiScrubStats(a(0))),
+    new SqlFunction("wide_bloom_positions(sh, hashes, bits)")(a =>
+      WideBloomPositions(a(0), a.int(1), a.int(2))),
+    new SqlFunction("json_fast_long(json, field)")(a => JsonFastLong(a(0), a.string(1))),
+    new SqlFunction("shared_shingle_count(text, shingles, width, stride, [constant_array])")(a =>
+      SharedShingleCount(a(0), a(1), a.int(2), a.int(3), a.flag(4))),
+    new SqlFunction("wide_bloom_flagged_shingles(text, words, width, stride, hashes, [constant_array])")(a =>
+      WideBloomFlaggedShingles(a(0), a(1), a.int(2), a.int(3), a.int(4), a.flag(5))))
 
-  /** Column-API handle for [[BloomFlaggedShingles]] (see [[register]]). */
-  def bloomFlaggedShingles(text: Column, bloomWords: Column, width: Int, stride: Int, hashes: Int): Column =
-    org.apache.spark.sql.functions.call_function("bloom_flagged_shingles",
-      text, bloomWords, org.apache.spark.sql.functions.lit(width), org.apache.spark.sql.functions.lit(stride),
-      org.apache.spark.sql.functions.lit(hashes))
-
-  /** Column-API handle for [[MinShingleMd5]] (see [[register]]). */
-  def minShingleMd5(text: Column, width: Int, stride: Int): Column =
-    org.apache.spark.sql.functions.call_function("min_shingle_md5",
-      text, org.apache.spark.sql.functions.lit(width), org.apache.spark.sql.functions.lit(stride))
-
-  /** Column-API handle for [[RepetitionStats]] (see [[register]]). */
-  def repetitionStats(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("repetition_stats", text)
-
-  /** Geometry args must be int literals (part of the operator's identity). */
-  private def intLit(e: Expression, sig: String): Int = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    e match {
-      case Literal(k: Int, _) => k
-      case other => throw new IllegalArgumentException(s"$sig: must be an int literal, got $other")
-    }
-  }
-
-  /** The optional trailing `constant_array` boolean literal after `n`
-    * arguments ([[ArrayMemo]]); false when absent.
+  /** Makes the catalog callable from `spark.sql` text in this session
+    * (graft's operators do not need it). A name already bound to graft's
+    * expression is left alone; a name bound to any other function is
+    * rebound to graft's.
     */
-  private def constantArrayArg(exprs: Seq[Expression], n: Int, sig: String): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    require(exprs.length == n || exprs.length == n + 1, s"$sig takes $n or ${n + 1} arguments")
-    exprs.length > n && (exprs(n) match {
-      case Literal(b: Boolean, _) => b
-      case other => throw new IllegalArgumentException(
-        s"$sig: constant_array must be a boolean literal, got $other")
-    })
-  }
-
-  /** The last of `n` args must be an int literal (probe-count geometry is
-    * part of the operator's identity, like minhash_slices' arguments).
-    */
-  private def intLitArg(exprs: Seq[Expression], n: Int, sig: String)(
-      build: Int => Expression): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    require(exprs.length == n, s"$sig takes $n arguments")
-    exprs.last match {
-      case Literal(k: Int, _) => build(k)
-      case other => throw new IllegalArgumentException(
-        s"$sig: the count must be an int literal, got $other")
-    }
-  }
-
-  /** Column-API handle for [[BloomPositions]] (see [[register]]). */
-  def bloomPositions(sh: Column, hashes: Int): Column =
-    org.apache.spark.sql.functions.call_function("bloom_positions",
-      sh, org.apache.spark.sql.functions.lit(hashes))
-
-  /** Column-API handle for [[BloomMember]] (see [[register]]). */
-  def bloomMember(sh: Column, words: Column, hashes: Int): Column =
-    org.apache.spark.sql.functions.call_function("bloom_member",
-      sh, words, org.apache.spark.sql.functions.lit(hashes))
-
-  /** Column-API handle for [[BloomDocBits]] (see [[register]]). */
-  def bloomDocBits(text: Column, width: Int, stride: Int, hashes: Int, words: Int): Column =
-    org.apache.spark.sql.functions.call_function("bloom_doc_bits",
-      text, org.apache.spark.sql.functions.lit(width), org.apache.spark.sql.functions.lit(stride),
-      org.apache.spark.sql.functions.lit(hashes), org.apache.spark.sql.functions.lit(words))
-
-  /** Column-API handle for [[BloomFlagCount]] (see [[register]]). */
-  def bloomFlagCount(text: Column, bloomWords: Column, width: Int, stride: Int, hashes: Int): Column =
-    org.apache.spark.sql.functions.call_function("bloom_flag_count",
-      text, bloomWords, org.apache.spark.sql.functions.lit(width), org.apache.spark.sql.functions.lit(stride),
-      org.apache.spark.sql.functions.lit(hashes))
-
-  /** Column-API handle for [[TextStats]] (see [[register]]). */
-  def textStats(text: Column, markers: Seq[String]): Column =
-    org.apache.spark.sql.functions.call_function("text_stats",
-      text, org.apache.spark.sql.functions.typedLit(markers))
-
-  /** Column-API handle for [[NormalizeText]] (see [[register]]). */
-  def normalizeText(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("normalize_text", text)
-
-  /** Registry/extension constructor — the marker set is part of the
-    * operator's identity, so it must be a string-array literal.
-    */
-  private[functions] def textStatsFromExprs(exprs: Seq[Expression]): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    require(exprs.length == 2, "text_stats(text, markers) takes 2 arguments")
-    val markers = exprs(1) match {
-      case Literal(a: ArrayData, ArrayType(StringType, _)) =>
-        a.toObjectArray(StringType)
-          .map(_.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString).toSeq
-      case other => throw new IllegalArgumentException(
-        s"text_stats: markers must be a string-array literal, got $other")
-    }
-    TextStats(exprs(0), markers)
-  }
-
-  /** Column-API handle for [[SimHash60]] (see [[register]]). */
-  def simhash60(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("simhash60", text)
-
-  /** Column-API handle for [[MinHashSlices]] (see [[register]]). */
-  def minhashSlices(text: Column, numHashes: Int, width: Int, stride: Int): Column =
-    org.apache.spark.sql.functions.call_function("minhash_slices",
-      text,
-      org.apache.spark.sql.functions.lit(numHashes),
-      org.apache.spark.sql.functions.lit(width),
-      org.apache.spark.sql.functions.lit(stride))
-
-  /** Registry/extension constructor — geometry arguments must be int
-    * literals (signature geometry is part of the operator's identity).
-    */
-  private[functions] def minHashFromExprs(exprs: Seq[Expression]): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    require(exprs.length == 4,
-      "minhash_slices(text, numHashes, width, stride) takes 4 arguments")
-    (exprs(1), exprs(2), exprs(3)) match {
-      case (Literal(n: Int, _), Literal(w: Int, _), Literal(s: Int, _)) =>
-        MinHashSlices(exprs(0), n, w, s)
-      case other => throw new IllegalArgumentException(
-        s"minhash_slices: numHashes/width/stride must be int literals, got $other")
-    }
-  }
-
-  /** Column-API handle for [[VectorSignBands]] (see [[register]]). */
-  def vectorSignBands(v: Column, planesFlat: Seq[Float], dim: Int, bitsPerBand: Int): Column =
-    org.apache.spark.sql.functions.call_function("vector_sign_bands",
-      v, org.apache.spark.sql.functions.typedLit(planesFlat),
-      org.apache.spark.sql.functions.lit(dim),
-      org.apache.spark.sql.functions.lit(bitsPerBand))
-
-  /** Registry/extension constructor: the planes/dim/bits arguments must
-    * be LITERALS (the planes are plan-time constants by design — the
-    * md5-derived hyperplane table is part of the operator's identity).
-    */
-  private[functions] def signBandsFromExprs(exprs: Seq[Expression]): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    require(exprs.length == 4,
-      "vector_sign_bands(vec, planesFlat, dim, bitsPerBand) takes 4 arguments")
-    val planes = exprs(1) match {
-      case Literal(a: ArrayData, ArrayType(FloatType, _)) => a.toFloatArray().toSeq
-      case other => throw new IllegalArgumentException(
-        s"vector_sign_bands: planes must be a float-array literal, got $other")
-    }
-    (exprs(2), exprs(3)) match {
-      case (Literal(dim: Int, _), Literal(bits: Int, _)) =>
-        VectorSignBands(exprs(0), planes, dim, bits)
-      case other => throw new IllegalArgumentException(
-        s"vector_sign_bands: dim and bitsPerBand must be int literals, got $other")
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    catalog.map(_.description).foreach { case (id, info, builder) =>
+      if (!registry.lookupFunction(id).exists(_.getClassName == info.getClassName))
+        registry.registerFunction(id, info, builder)
     }
   }
 }
 
-/** SparkSessionExtensions entry point: lets deployments wire the engine's
-  * custom expressions at session-build time —
-  * a session builder's `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions` — instead of the
-  * per-session [[VectorExpressions.register]] call the operators make
-  * defensively.
+/** One SQL function of [[VectorExpressions.catalog]]. `signature` names
+  * its arguments, an optional one in brackets; a call with another number
+  * of arguments fails with the signature in the message.
+  */
+final class SqlFunction[T <: Expression](val signature: String)(make: SqlArgs => T)(
+    implicit tag: scala.reflect.ClassTag[T]) {
+  val name: String = signature.takeWhile(_ != '(')
+  private[functions] val params: Seq[String] = signature.drop(name.length + 1).dropRight(1).split(", ").toSeq
+  val arity: Range = params.count(!_.startsWith("[")) to params.length
+
+  private def build(exprs: Seq[Expression]): T = {
+    if (!arity.contains(exprs.length)) {
+      val takes = if (arity.size == 1) s"${arity.start}" else s"${arity.start} or ${arity.end}"
+      throw new IllegalArgumentException(
+        s"$signature takes $takes arguments, got ${exprs.length}")
+    }
+    make(new SqlArgs(this, exprs))
+  }
+
+  /** The (name, info, builder) triple Spark's registry and extensions take. */
+  def description: (org.apache.spark.sql.catalyst.FunctionIdentifier,
+      org.apache.spark.sql.catalyst.expressions.ExpressionInfo, Seq[Expression] => Expression) =
+    (org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(tag.runtimeClass.getName, name),
+      build(_))
+}
+
+/** The arguments of one SQL call, with readers for the literal ones. */
+final class SqlArgs(fn: SqlFunction[_], exprs: Seq[Expression]) {
+  import org.apache.spark.sql.catalyst.expressions.Literal
+  import org.apache.spark.unsafe.types.UTF8String
+
+  def apply(i: Int): Expression = exprs(i)
+
+  def int(i: Int): Int = literal(i, "an int") { case Literal(k: Int, _) => k }
+
+  def string(i: Int): String =
+    literal(i, "a string") { case Literal(s: UTF8String, StringType) => s.toString }
+
+  def strings(i: Int): Seq[String] = literal(i, "a string-array") {
+    case Literal(a: ArrayData, ArrayType(StringType, _)) =>
+      a.toObjectArray(StringType).map(_.asInstanceOf[UTF8String].toString).toSeq
+  }
+
+  def floats(i: Int): Seq[Float] = literal(i, "a float-array") {
+    case Literal(a: ArrayData, ArrayType(FloatType, _)) => a.toFloatArray().toSeq
+  }
+
+  /** An optional trailing boolean literal; false when absent. */
+  def flag(i: Int): Boolean =
+    exprs.length > i && literal(i, "a boolean") { case Literal(b: Boolean, _) => b }
+
+  private def literal[T](i: Int, kind: String)(read: PartialFunction[Expression, T]): T =
+    read.applyOrElse(exprs(i), (e: Expression) => throw new IllegalArgumentException(
+      s"${fn.signature}: ${fn.params(i).stripPrefix("[").stripSuffix("]")} must be $kind literal, got $e"))
+}
+
+/** SparkSessionExtensions entry point: a session built with
+  * `.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.functions.GraftExtensions` resolves every
+  * function of [[VectorExpressions.catalog]] in SQL text.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("vector_dot"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[VectorDotProduct].getName, "vector_dot"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          VectorDotProduct(exprs(0), exprs(1))))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("vector_sign_bands"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[VectorSignBands].getName, "vector_sign_bands"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          VectorExpressions.signBandsFromExprs(exprs)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_slices"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[MinHashSlices].getName, "minhash_slices"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          VectorExpressions.minHashFromExprs(exprs)))
-  }
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    VectorExpressions.catalog.foreach(f => ext.injectFunction(f.description))
 }

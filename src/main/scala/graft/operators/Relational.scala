@@ -89,7 +89,6 @@ object Relational {
     // scaladoc); anything else falls through to the ORIGINAL from_json
     // branch, so the composition is bit-identical on every input. The
     // test corpus's props are 100% fast-path hits.
-    graft.functions.VectorExpressions.register(events.sparkSession)
     val fast = graft.functions.VectorExpressions.jsonFastLong(col("props"), "k")
     val slow = from_json(col("props"),
       org.apache.spark.sql.types.StructType.fromDDL("k BIGINT")).getField("k")

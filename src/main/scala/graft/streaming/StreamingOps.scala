@@ -775,7 +775,6 @@ object StreamingOps {
                    servedTtl: Option[java.time.Duration] =
                      Some(java.time.Duration.ofHours(1))): Dataset[AnnHit] = {
     import queries.sparkSession.implicits._
-    graft.functions.VectorExpressions.register(queries.sparkSession)
     val dot = graft.functions.Similarity.dot _
     val centArr = centroids
       .withColumn("cnrm", sqrt(dot(col("cv"), col("cv"))))
@@ -823,7 +822,6 @@ object StreamingOps {
     * row-for-row).
     */
   def ivfAssignStream(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     val dot = graft.functions.Similarity.dot _
     val centArr = centroids
       .withColumn("cnrm", sqrt(dot(col("cv"), col("cv"))))
@@ -846,7 +844,6 @@ object StreamingOps {
     */
   def pqAssignStream(vectors: DataFrame, codebook: DataFrame,
                      numSub: Int, subDim: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(vectors.sparkSession)
     val dot = graft.functions.Similarity.dot _
     val cbArr = codebook.groupBy(col("m"))
       .agg(collect_list(struct(col("code"), col("cv"))).as("codes"))

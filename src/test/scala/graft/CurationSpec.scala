@@ -427,7 +427,6 @@ class CurationSpec extends SparkSpec {
       df.select(col("doc_id")).join(m, Seq("doc_id"), "left")
         .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     }
-    graft.functions.VectorExpressions.register(spark)
     def compiled(df: org.apache.spark.sql.DataFrame): Map[Long, Option[String]] =
       df.select(col("doc_id"),
           graft.functions.VectorExpressions.minShingleMd5(col("text"), 8, 4).as("fp_min"))
@@ -459,7 +458,6 @@ class CurationSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), if (r.isNullAt(3)) 0L else r.getLong(3)))).toMap
     }
-    graft.functions.VectorExpressions.register(spark)
     def compiled(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long, Long)] =
       df.select(col("doc_id"), graft.functions.VectorExpressions.repetitionStats(col("text")).as("st"))
         .select(col("doc_id"), col("st.n_words"), col("st.n_distinct"), col("st.top_bigram"))
@@ -490,7 +488,6 @@ class CurationSpec extends SparkSpec {
         size(filter(split(col("text"), " "), t => t.isin(markers: _*))).cast("long").as("n_stops"),
         (length(col("text")) - length(regexp_replace(col("text"), "[^a-z0-9 ]", ""))).cast("long").as("n_nonalnum"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    graft.functions.VectorExpressions.register(spark)
     val neu = edge.select(col("doc_id"),
         graft.functions.VectorExpressions.textStats(col("text"), markers).as("st"))
       .select(col("doc_id"), col("st.n_chars"), col("st.n_tokens"), col("st.n_stops"), col("st.n_nonalnum"))
@@ -520,7 +517,6 @@ class CurationSpec extends SparkSpec {
     val old = edge.select(col("doc_id"),
         trim(regexp_replace(regexp_replace(lower(col("text")), "[^a-z0-9 ]", " "), " +", " ")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    graft.functions.VectorExpressions.register(spark)
     val neu = edge.select(col("doc_id"),
         graft.functions.VectorExpressions.normalizeText(col("text")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -592,7 +588,6 @@ class CurationSpec extends SparkSpec {
           .as("bigram"))
         .groupBy(col("doc_id"), col("bigram")).agg(count(lit(1)).as("c"))
         .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-    graft.functions.VectorExpressions.register(spark)
     def compiled(df: org.apache.spark.sql.DataFrame): Map[(Long, String), Long] =
       df.select(col("doc_id"),
           explode(graft.functions.VectorExpressions.bigramCounts(col("text"))).as("bc"))
@@ -612,7 +607,6 @@ class CurationSpec extends SparkSpec {
       df.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
         .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
         .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-    graft.functions.VectorExpressions.register(spark)
     def compiled(df: org.apache.spark.sql.DataFrame): Map[(Long, String), Long] =
       df.select(col("doc_id"),
           explode(graft.functions.VectorExpressions.tokenCounts(col("text"))).as("tc"))
@@ -636,7 +630,6 @@ class CurationSpec extends SparkSpec {
           "transform(sequence(1, length(tok)-1), i -> substring(tok, i, 2))")).as("pair"))
         .groupBy(col("doc_id"), col("pair")).agg(count(lit(1)).as("c"))
         .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-    graft.functions.VectorExpressions.register(spark)
     def compiled(df: org.apache.spark.sql.DataFrame): Map[(Long, String), Long] =
       df.select(col("doc_id"),
           explode(graft.functions.VectorExpressions.bpePairCounts(col("text"))).as("pc"))
@@ -665,7 +658,6 @@ class CurationSpec extends SparkSpec {
           size(slice(col("toks"), col("start") + lit(1), lit(k))).as("ntok"))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getInt(3))).toSet
     }
-    graft.functions.VectorExpressions.register(spark)
     def compiled(df: org.apache.spark.sql.DataFrame, k: Int): Set[(Long, Int, String, Int)] =
       df.select(col("doc_id"),
           posexplode(graft.functions.VectorExpressions.spanTiles(col("text"), k))
@@ -687,7 +679,6 @@ class CurationSpec extends SparkSpec {
     def composed(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
       TextAnalysis.shingles(df, "doc_id", "text", 8, 4)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    graft.functions.VectorExpressions.register(spark)
     def compiled(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
       df.select(col("doc_id"),
           explode(graft.functions.VectorExpressions.distinctShingles(col("text"), 8, 4)).as("sh"))
@@ -708,7 +699,6 @@ class CurationSpec extends SparkSpec {
           size(split(col("text"), " ")).cast("long").as("ws"),
           regexp_count(col("text"), lit("[a-z]+|[0-9]+|[^a-z0-9 ]")).cast("long").as("re"))
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    graft.functions.VectorExpressions.register(spark)
     def compiled(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long)] =
       df.select(col("doc_id"),
           graft.functions.VectorExpressions.tokenizeCounts(col("text")).as("tc"))
@@ -731,7 +721,6 @@ class CurationSpec extends SparkSpec {
       df.select(col("doc_id") +: sets.zipWithIndex.map { case (m, i) =>
           size(filter(split(col("text"), " "), t => t.isin(m: _*))).cast("long").as(s"c$i") }: _*)
         .collect().map(r => r.getLong(0) -> (1 to sets.length).map(r.getLong(_)).toSeq).toMap
-    graft.functions.VectorExpressions.register(spark)
     def compiled(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
       df.select(col("doc_id"),
           graft.functions.VectorExpressions.langMarkerCounts(col("text"), sets).as("c"))
@@ -775,7 +764,6 @@ class CurationSpec extends SparkSpec {
           scrub)
         .collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))).toMap
-    graft.functions.VectorExpressions.register(spark)
     def compiled(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long, Long, String)] =
       df.select(col("doc_id"),
           graft.functions.VectorExpressions.piiScrubStats(col("text")).as("ps"))

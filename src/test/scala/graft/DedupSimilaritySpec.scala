@@ -174,7 +174,6 @@ class DedupSimilaritySpec extends SparkSpec {
       7L -> "a b a b a b a b c") // repeated tokens exercise the vote counts
     val composed = Dedup.simhashMd5(edge, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    VectorExpressions.register(spark)
     val compiled = edge.select(col("doc_id"),
         VectorExpressions.simhash60(col("text")).as("simhash"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -209,7 +208,6 @@ class DedupSimilaritySpec extends SparkSpec {
       .filter(col("hamming") <= 3)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toSet
     assert(expected.nonEmpty, "fixture has no hamming<=3 pairs — spec is vacuous")
-    VectorExpressions.register(spark)
     val sh = sfDocs.select(col("doc_id"),
       VectorExpressions.simhash60(col("text")).as("simhash"))
     Seq(4, 5, 6).foreach { m =>
@@ -270,7 +268,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("vector_dot matches a hand-computed dot product") {
-    VectorExpressions.register(spark)
     val df = vecs(1L -> Seq(1f, 2f, 3f), 2L -> Seq(4f, 5f, 6f))
     val a = df.filter(col("vec_id") === 1).select(col("embedding").as("va"))
     val b = df.filter(col("vec_id") === 2).select(col("embedding").as("vb"))
@@ -281,7 +278,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("vector_dot edge cases: length mismatch truncates, null propagates, empty is 0") {
-    VectorExpressions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Seq(1f, 2f, 3f), Seq(10f, 20f)),          // length mismatch → min length
@@ -295,14 +291,17 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(withNull.forall(identity)) // null input → null output
   }
 
-  test("GraftExtensions injects vector_dot at session-build time") {
-    // a genuinely fresh session (newSession shares extensions, so build one
-    // against the same context with the extensions class applied via conf)
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions().apply(ext)
-    // the injected builder must produce the codegen expression
-    val fresh = spark.newSession()
-    graft.functions.VectorExpressions.register(fresh)
+  test("GraftExtensions alone resolves every catalog function in SQL text") {
+    // its own registry, filled only by the extensions: no register call
+    val fresh = sessionWith(new graft.functions.GraftExtensions)
+    val catalog = VectorExpressions.catalog
+    assert(catalog.map(_.name).distinct.size === 26)
+    for (f <- catalog) {
+      val cls = f.description._2.getClassName
+      assert(cls.startsWith("graft.functions."), s"${f.name} builds $cls")
+      val described = fresh.sql(s"DESCRIBE FUNCTION ${f.name}").collect().map(_.getString(0))
+      assert(described.contains(s"Class: $cls"), described.mkString("; "))
+    }
     val d = fresh.sql("SELECT vector_dot(array(CAST(1 AS FLOAT), CAST(2 AS FLOAT)), " +
       "array(CAST(3 AS FLOAT), CAST(4 AS FLOAT))) AS d").collect()(0).getDouble(0)
     assert(d === 11.0)

@@ -306,7 +306,6 @@ class MultiStreamSpec extends SparkSpec {
       """{"kk": 3}""", """{"k": +5}""", """{"k": 5e2}""")
       .zipWithIndex.map { case (s, i) => (i.toLong, s) }
     val df = rows.toDF("id", "props")
-    graft.functions.VectorExpressions.register(spark)
     val slow = from_json(col("props"),
       org.apache.spark.sql.types.StructType.fromDDL("k BIGINT")).getField("k")
     val fast = graft.functions.VectorExpressions.jsonFastLong(col("props"), "k")

@@ -3,19 +3,34 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, one session). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  private def builder = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config(graft.engine.SessionConfs.All)
-    .getOrCreate()
+
+  lazy val spark: SparkSession = builder.getOrCreate()
+
+  /** A new session on the shared context whose function registry holds
+    * Spark's built-ins plus what `extensions` inject, and nothing else.
+    * The active and default sessions stay as they were.
+    */
+  def sessionWith(extensions: SparkSessionExtensions => Unit): SparkSession = {
+    spark // the shared context exists first, so the builder reuses it
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    try builder.withExtensions(extensions).create()
+    finally {
+      active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+      default.fold(SparkSession.clearDefaultSession())(SparkSession.setDefaultSession)
+    }
+  }
 
   /** The sf dirs TESTDATA.md documents, where present, smallest first. */
   lazy val testDataDirs: Seq[String] = {
