@@ -26,14 +26,11 @@ object StageBench {
 
     // wipe this corpus dir's fingerprinted stores so every build is cold
     // (with an `only` filter, wipe just the matching auto/ann/etc dirs)
-    val tag = graft.functions.Stores.dirTag(sfDir)
-    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
-      val name = st.getPath.getName
-      if (name.contains(s"_${tag}_") && only.forall(name.contains))
-        fs.delete(st.getPath, true)
-    }
+    graft.engine.Stores.of(spark, sfDir).filter(p => only.forall(p.getName.contains))
+      .foreach { p =>
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+        println(s"[stage] wiped ${p.getName}")
+      }
 
     val docs = graft.engine.Tables.documents(spark, sfDir)
     val emb = graft.engine.Tables.embeddings(spark, sfDir)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.{QueryDef, Tables}
+import graft.engine.{QueryDef, Stores, Tables}
 
 /** Staged ANN index — the production shape of [[Similarity.knnIvf]] and
   * [[Similarity.pqKnn]]: train ONCE per corpus, persist the index to
@@ -48,17 +48,6 @@ object AnnIndex {
   val Iters = 3
   private val SubDim = Dim / NumSub
 
-  /** Warehouse-relative index directory, fingerprinted by sf-dir AND
-    * geometry so a geometry change can never silently serve a stale
-    * index — the [[Stores]] layout shared with [[SigIndex]].
-    */
-  private def basePath(spark: SparkSession, dir: String): org.apache.hadoop.fs.Path =
-    // r2: layout revision — r2 added the residual-PQ (IVF-PQ) artifacts;
-    // bumping the suffix orphans pre-revision dirs instead of serving an
-    // index that lacks the new artifacts behind a valid marker
-    Stores.storePath(spark, dir, "ann",
-      s"c${NumCells}s${NumSub}x${NumCodes}i${Iters}r2")
-
   /** Hive-partitioned postings write, clustered by the partition column
     * FIRST: without the repartition every write task touches every cell
     * dir — tasks × cells output files (97 869 in the sf100 auto store,
@@ -71,13 +60,17 @@ object AnnIndex {
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
 
-  /** Build-once staging via [[Stores.buildOnce]]: the `_GRAFT_ANN_OK`
-    * marker written AFTER all four artifacts makes interrupted builds
-    * self-healing (no marker → the partial directory is deleted and
-    * rebuilt). Returns the index directory.
+  /** Build-once staging through [[Stores.stage]], one directory per
+    * (sf-dir, geometry) fingerprint: the store is published only once
+    * all four artifacts are written, so a geometry change or an
+    * interrupted build can never serve a stale or partial index.
+    * Returns the index directory.
     */
   def stageOnce(spark: SparkSession, dir: String): String =
-    Stores.buildOnce(spark, basePath(spark, dir), "_GRAFT_ANN_OK") { base =>
+    // r2: layout revision — r2 added the residual-PQ (IVF-PQ) artifacts;
+    // bumping the suffix orphans pre-revision dirs instead of serving an
+    // index that lacks the new artifacts behind a valid marker
+    Stores.stage(spark, dir, "ann", s"c${NumCells}s${NumSub}x${NumCodes}i${Iters}r2") { base =>
     val emb = Tables.embeddings(spark, dir)
     val cent = Similarity.ivfCentroids(emb, "vec_id", "embedding", NumCells, Iters)
     cent.write.mode("overwrite").parquet(s"$base/ivf_centroids")
@@ -124,10 +117,8 @@ object AnnIndex {
     * mistaken for the sliced one.
     */
   def stageIncrBase(spark: SparkSession, dir: String): String =
-    Stores.buildOnce(spark,
-      Stores.storePath(spark, dir, "ann",
-        s"c${NumCells}s${NumSub}x${NumCodes}i${Iters}m${IncrMod}_incr_r1"),
-      "_GRAFT_ANN_OK") { base =>
+    Stores.stage(spark, dir, "ann",
+        s"c${NumCells}s${NumSub}x${NumCodes}i${Iters}m${IncrMod}_incr_r1") { base =>
     val emb = Tables.embeddings(spark, dir).filter(incrTrainPred)
     val cent = Similarity.ivfCentroids(emb, "vec_id", "embedding", NumCells, Iters)
     cent.write.mode("overwrite").parquet(s"$base/ivf_centroids")
@@ -149,29 +140,20 @@ object AnnIndex {
     */
   def defaultBatches: Seq[(Column, String)] = Seq((incrNewPred, "b1"))
 
-  /** Delta directory name for an ingest batch: the batch PREDICATE is
-    * fingerprinted into the name alongside the human tag, so re-running
-    * an append with a different predicate under the same tag can never
-    * silently serve the stale segment — a changed predicate lands in a
-    * fresh directory and the old one is orphaned (same idiom as the
-    * geometry fingerprint in [[basePath]]).
-    */
-  private def deltaDirName(batchPred: Column, batchTag: String): String = {
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(batchPred.toString.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"delta_${batchTag}_$fp"
-  }
-
   /** Append an ingest batch to the staged incremental index WITHOUT
     * touching the stored base: the batch is encoded against the STORED
     * centroids and codebook (pure per-row assignment — zero retraining,
     * zero reshuffle of the existing corpus, the
     * [[Similarity.knnIvfIncremental]] contract applied to the store) and
     * written as a self-contained delta segment
-    * `delta_<batchTag>_<predFp>/{ivf_postings,pq_codes}` with its own
-    * completion marker — an interrupted append self-heals by rebuilding
+    * `delta_<batchTag>_<predFp>/{ivf_postings,pq_codes}` published on
+    * its own ([[Stores.stageSegment]]) — an interrupted append rebuilds
     * only its delta, never the base (the segment model every production
-    * index store uses: immutable base plus append-only revisions).
+    * index store uses: immutable base plus append-only revisions). The
+    * batch PREDICATE is fingerprinted into the name alongside the human
+    * tag, so re-running an append with a different predicate under the
+    * same tag lands in a fresh directory instead of serving the stale
+    * segment.
     * Serving reads base ∪ the manifest's deltas
     * ([[knnIvfStagedIncr]]/[[pqKnnStagedIncr]]); both sides stay
     * hive-partitioned by cell, so file-level pruning on probed cells
@@ -181,9 +163,7 @@ object AnnIndex {
   def appendToIndex(spark: SparkSession, dir: String, batchPred: Column,
                     batchTag: String = "b1"): String = {
     val base = stageIncrBase(spark, dir)
-    Stores.buildOnce(spark,
-      new org.apache.hadoop.fs.Path(base, deltaDirName(batchPred, batchTag)),
-      "_GRAFT_DELTA_OK") { delta =>
+    Stores.stageSegment(spark, base, s"delta_$batchTag", batchPred.toString) { delta =>
       val batch = Tables.embeddings(spark, dir).filter(batchPred)
       val centStored = Tables.parquet(spark, s"$base/ivf_centroids")
       writePostings(Similarity.assignCells(batch, centStored, "vec_id", "embedding"),
@@ -759,9 +739,7 @@ object AnnIndex {
     val geom = if (hier)
       s"auto_c${cells}i${Iters}m${mod}h${Similarity.hierBranchesFor(cells)}p${HierBranchProbe}r1"
     else s"auto_c${cells}i${Iters}m${mod}r1"
-    val path = Stores.buildOnce(spark,
-      Stores.storePath(spark, dir, "ann", geom),
-      "_GRAFT_ANN_OK") { base =>
+    val path = Stores.stage(spark, dir, "ann", geom) { base =>
       val cent = Similarity.ivfCentroids(
         Similarity.ivfTrainSlice(emb, "vec_id", mod), "vec_id", "embedding", cells, Iters)
       cent.write.mode("overwrite").parquet(s"$base/ivf_centroids")

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{QueryDef, Tables}
+import graft.engine.{QueryDef, Stores, Tables}
 
 /** Staged MinHash signature index — the document-dedup analogue of
   * [[AnnIndex]]: shingle + md5 + min-aggregate ONCE per corpus revision,
@@ -25,31 +25,16 @@ import graft.engine.{QueryDef, Tables}
   * Layout under one (sf-dir, geometry) fingerprint directory:
   *  - `minhash_sigs` (doc_id, mh_1..mh_8) — the signature table
   *  - `band_index`   (doc_id, band, sig)  — the LSH candidate structure
-  * with the same `_GRAFT_SIG_OK` self-healing completion-marker protocol
-  * as [[AnnIndex.stageOnce]].
+  * staged through the same [[Stores]] seam as [[AnnIndex.stageOnce]]:
+  * published by one rename once every artifact is written.
   */
 object SigIndex {
   val NumHashes = 8
   val RowsPerBand = 2
 
-  /** Store layout + completion-marker protocol: the [[Stores]] object
-    * shared with [[AnnIndex]] — one fingerprint and crash-recovery
-    * contract for every staged index family.
-    */
-  private def storePath(spark: SparkSession, dir: String, kind: String,
-                        geom: String): org.apache.hadoop.fs.Path =
-    Stores.storePath(spark, dir, kind, geom)
-
-  private def buildOnce(spark: SparkSession, base: org.apache.hadoop.fs.Path,
-                        markerName: String)(build: String => Unit): String =
-    Stores.buildOnce(spark, base, markerName)(build)
-
-  private def basePath(spark: SparkSession, dir: String): org.apache.hadoop.fs.Path =
-    storePath(spark, dir, "sig", s"h${NumHashes}b${RowsPerBand}_r1")
-
-  /** Fingerprint directory for the staged SHINGLE store — the exact
-    * distinct stride-sampled character shingles the n-gram family
-    * (jaccard, containment, QA-report ground truth) computes inline.
+  /** The staged SHINGLE store — the exact distinct stride-sampled
+    * character shingles the n-gram family (jaccard, containment,
+    * QA-report ground truth) computes inline.
     * Separate artifact from the minhash store: different geometry
     * (width 8 / stride [[Dedup.NgramStride]], distinct) and a much
     * larger footprint (per-stride-position rows, not 8 hashes —
@@ -59,15 +44,10 @@ object SigIndex {
     * scan→explode→distinct derivation that dominates every exact pass
     * and never touch document text. Stage it when the exact family
     * runs repeatedly per corpus revision; skip it for one-shot audits.
-    */
-  private def shingleBasePath(spark: SparkSession, dir: String): org.apache.hadoop.fs.Path =
-    storePath(spark, dir, "shingle", s"w8s${Dedup.NgramStride}_r1")
-
-  /** Build the shingle store once per (corpus dir, geometry) — same
-    * `_GRAFT_SHINGLE_OK` self-healing marker protocol as [[stageOnce]].
+    * Built once per (corpus dir, geometry), like [[stageOnce]].
     */
   def stageShingles(spark: SparkSession, dir: String): String =
-    buildOnce(spark, shingleBasePath(spark, dir), "_GRAFT_SHINGLE_OK") { base =>
+    Stores.stage(spark, dir, "shingle", s"w8s${Dedup.NgramStride}_r1") { base =>
       val docs = Tables.documents(spark, dir)
       TextAnalysis.shingles(docs, "doc_id", "text", width = 8, stride = Dedup.NgramStride)
         .write.mode("overwrite").parquet(s"$base/shingles")
@@ -179,8 +159,7 @@ object SigIndex {
     * store: the corpus-sized band geometry ([[Dedup.lshBitsFor]], 8 bands
     * × bits ≈ log2(n/16)) computes ~8·bits hyperplane dot products per
     * vector and explodes them into (vec_id, band, key) bucket rows; that
-    * happens ONCE per corpus revision here, behind a `_GRAFT_VLSH_OK`
-    * marker. Band bits live in the directory fingerprint, so corpus
+    * happens ONCE per corpus revision here, in a staged store. Band bits live in the directory fingerprint, so corpus
     * growth that shifts the sizing rule rebuilds the store instead of
     * serving stale geometry (same contract as the auto-IVF store). The
     * serve re-reads only the embedding table (for exact cosine scoring of
@@ -206,9 +185,7 @@ object SigIndex {
     // but the bit width is part of the directory fingerprint
     val (bits, probe) = Dedup.lshGeometryFor(
       Tables.rowCount(spark, dir, "embeddings"), targetBucket)
-    val base = buildOnce(spark,
-        storePath(spark, dir, "vlsh", s"b${numBands}x${bits}_r1"),
-        "_GRAFT_VLSH_OK") { base =>
+    val base = Stores.stage(spark, dir, "vlsh", s"b${numBands}x${bits}_r1") { base =>
       Dedup.embLshBandTable(Similarity.withNorm(emb, "vec_id", "embedding"),
           "vec_id", numBands * bits, bits, dim)
         .write.mode("overwrite").parquet(s"$base/bands")
@@ -248,7 +225,7 @@ object SigIndex {
     * serve shares [[TextAnalysis.bm25TopKSqlFor]] unchanged.
     */
   def stageBm25(spark: SparkSession, dir: String): String =
-    buildOnce(spark, storePath(spark, dir, "bm25", "ws_r1"), "_GRAFT_BM25_OK") { base =>
+    Stores.stage(spark, dir, "bm25", "ws_r1") { base =>
       val docs = Tables.documents(spark, dir)
       val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       toks.groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
@@ -309,7 +286,7 @@ object SigIndex {
     * shipped as an immutable artifact, revised only with the corpus.
     */
   def stageBpe(spark: SparkSession, dir: String, merges: Int = 4): String =
-    buildOnce(spark, storePath(spark, dir, "bpe", s"m${merges}_r1"), "_GRAFT_BPE_OK") { base =>
+    Stores.stage(spark, dir, "bpe", s"m${merges}_r1") { base =>
       TextAnalysis.bpeSegmentation(Tables.documents(spark, dir), "text", merges)
         .write.mode("overwrite").parquet(s"$base/segmentation")
     }
@@ -326,7 +303,7 @@ object SigIndex {
   }
 
   def stageOnce(spark: SparkSession, dir: String): String =
-    buildOnce(spark, basePath(spark, dir), "_GRAFT_SIG_OK") { base =>
+    Stores.stage(spark, dir, "sig", s"h${NumHashes}b${RowsPerBand}_r1") { base =>
       val docs = Tables.documents(spark, dir)
       Dedup.minhashSignaturesFromText(docs, "doc_id", "text", NumHashes)
         .write.mode("overwrite").parquet(s"$base/minhash_sigs")
@@ -374,7 +351,7 @@ object SigIndex {
       .select(col("doc_a"), col("doc_b"), (agree.cast("double") / NumHashes).as("est_jacc"))
   }
 
-  /** Fingerprint directory for the staged CLUSTER MAP — the connected-
+  /** The staged CLUSTER MAP — the connected-
     * components decision itself as a store product. Round 14 measured the
     * gap this closes: the clusters/pipeline serves recomputed the full CC
     * per serve, and at sf100 that recomputation was the repo's only
@@ -384,28 +361,24 @@ object SigIndex {
     * (keep-best, reporting, repeated curation passes) JOINS the stored
     * (doc_id, cluster_id) map instead of re-running graph algorithms.
     * Geometry inherits the signature store's (the map is a pure function
-    * of the band index), plus the CC marker.
-    */
-  // r2: the raw banded pair list joined the store (round 16). The pair
-  // generation (band self-join) was being re-run inside EVERY pair
-  // consumer's serve — 8.2 s of the 32.2 s doc_pagerank_staged, 11.7 s
-  // split_leakage_staged, 12.8 s est serve at sf100 — yet the cluster
-  // build already computes exactly those pairs. Materializing them is
-  // free at build time (they flow to CC through the same write) and
-  // turns every consumer's candidate stage into a parquet read.
-  private def clustersBasePath(spark: SparkSession, dir: String): org.apache.hadoop.fs.Path =
-    storePath(spark, dir, "clusters", s"h${NumHashes}b${RowsPerBand}cc_r3")
-
-  /** Build the pair list + cluster map once per (corpus dir, geometry):
-    * stored-band candidate pairs (written as the `pairs` artifact) →
-    * connected components (contraction + single-task union-find endgame)
-    * → one (doc_id, cluster_id) row per document, singletons included.
-    * CC reads the pairs back from the just-written parquet, so the band
-    * self-join runs exactly once per revision. Same `_GRAFT_CLUSTERS_OK`
-    * self-healing marker protocol as every other store.
+    * of the band index), plus the CC suffix.
+    *
+    * Built once per (corpus dir, geometry): stored-band candidate pairs
+    * (written as the `pairs` artifact) → connected components
+    * (contraction + single-task union-find endgame) → one
+    * (doc_id, cluster_id) row per document, singletons included. CC
+    * reads the pairs back from the just-written parquet, so the band
+    * self-join runs exactly once per revision.
     */
   def stageClusters(spark: SparkSession, dir: String): String =
-    buildOnce(spark, clustersBasePath(spark, dir), "_GRAFT_CLUSTERS_OK") { base =>
+    // r2: the raw banded pair list joined the store (round 16). The pair
+    // generation (band self-join) was being re-run inside EVERY pair
+    // consumer's serve — 8.2 s of the 32.2 s doc_pagerank_staged, 11.7 s
+    // split_leakage_staged, 12.8 s est serve at sf100 — yet the cluster
+    // build already computes exactly those pairs. Materializing them is
+    // free at build time (they flow to CC through the same write) and
+    // turns every consumer's candidate stage into a parquet read.
+    Stores.stage(spark, dir, "clusters", s"h${NumHashes}b${RowsPerBand}cc_r3") { base =>
       minhashPairsStaged(spark, dir)
         .write.mode("overwrite").parquet(s"$base/pairs")
       val pairs = Tables.parquet(spark, s"$base/pairs")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{QueryDef, Tables}
+import graft.engine.{QueryDef, Stores, Tables}
 
 /** Scale utilities: the partitioning patterns a 100 TB deployment leans on
   * when the defaults (AQE skew splitting, broadcast thresholds) need a
@@ -150,29 +150,6 @@ object Scale {
   def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String, key: String): DataFrame =
     spark.table(leftTable).hint("merge").join(spark.table(rightTable), Seq(key))
 
-  /** Stage `df` as a bucketed table exactly once per session: skipped when
-    * the table is already registered, and a stale warehouse directory left
-    * by an interrupted run is removed first (it would otherwise block the
-    * managed-table CREATE). The location is resolved through the Hadoop
-    * Path/FileSystem APIs, so `file:`, `file://`, URI-encoded characters
-    * and non-local warehouses all clean up correctly.
-    *
-    * Same-session staleness: if the underlying sf-dir's parquet is
-    * regenerated WITHIN one session, the already-registered table keeps
-    * serving the earlier staging (the table-name sf-dir fingerprint only
-    * isolates different paths, not rewrites of the same path) — acceptable
-    * because testdata dirs are immutable per driver run.
-    */
-  def stageBucketedOnce(df: DataFrame, table: String, key: String, buckets: Int): Unit = {
-    val spark = df.sparkSession
-    if (spark.catalog.tableExists(table)) return
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    writeBucketed(df, table, key, buckets)
-  }
-
   /** TPC-H Q18 shape off bucketed staging — the end-to-end demonstration
     * that [[writeBucketed]] layout pays: `lineitem` and `orders` are staged
     * once per sf-dir bucketed (and sorted) by order key, after which BOTH
@@ -183,7 +160,7 @@ object Scale {
     * serves every downstream orderkey join/agg.
     *
     * Staging prunes to the referenced columns (the bucketed "index" is
-    * narrow), and `stageBucketedOnce` makes re-runs in one session reuse
+    * narrow), and [[Stores.stageTable]] makes re-runs in one session reuse
     * the layout — which is exactly what the bench's min-of-2 then measures:
     * the steady-state bucketed-scan query, not the one-time ingest.
     */
@@ -199,14 +176,10 @@ object Scale {
       if (buckets > 0) buckets else shufflePartitionsFor(dirBytes(dir))
     // table names carry an sf-dir fingerprint so different test scales
     // never silently share staging
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val liT = s"graft_bkt_lineitem_$tag"
-    val ordT = s"graft_bkt_orders_$tag"
-    stageBucketedOnce(Tables.lineitem(spark, dir).select("l_orderkey", "l_quantity"),
-      liT, "l_orderkey", nBuckets)
-    stageBucketedOnce(Tables.orders(spark, dir).select("o_orderkey", "o_orderdate"),
-      ordT, "o_orderkey", nBuckets)
+    val liT = Stores.stageTable(spark, dir, "bkt", "lineitem")(writeBucketed(
+      Tables.lineitem(spark, dir).select("l_orderkey", "l_quantity"), _, "l_orderkey", nBuckets))
+    val ordT = Stores.stageTable(spark, dir, "bkt", "orders")(writeBucketed(
+      Tables.orders(spark, dir).select("o_orderkey", "o_orderdate"), _, "o_orderkey", nBuckets))
     val big = spark.table(liT).groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity")).as("total_qty"))
       .filter(col("total_qty") > 150)
@@ -232,19 +205,6 @@ object Scale {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Once-per-session partitioned staging; same contract and stale-dir
-    * handling as [[stageBucketedOnce]].
-    */
-  def stagePartitionedOnce(df: DataFrame, table: String, partCol: String): Unit = {
-    val spark = df.sparkSession
-    if (spark.catalog.tableExists(table)) return
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    writePartitioned(df, table, partCol)
-  }
-
   /** Per-source counts of English documents off language-partitioned
     * staging — partition pruning as a registered, oracle-audited
     * capability. The `lang = 'en'` predicate resolves against the
@@ -256,11 +216,8 @@ object Scale {
     * [[q18Bucketed]]).
     */
   def prunedLangCounts(spark: SparkSession, dir: String): DataFrame = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val docT = s"graft_part_documents_$tag"
-    stagePartitionedOnce(Tables.documents(spark, dir).select("doc_id", "source", "lang"),
-      docT, "lang")
+    val docT = Stores.stageTable(spark, dir, "part", "documents")(writePartitioned(
+      Tables.documents(spark, dir).select("doc_id", "source", "lang"), _, "lang"))
     spark.table(docT)
       .filter(col("lang") === "en")
       .groupBy(col("source")).agg(count(lit(1)).as("cnt"))

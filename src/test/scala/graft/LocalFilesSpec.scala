@@ -44,7 +44,7 @@ class LocalFilesSpec extends SparkSpec {
       new ProcessBuilder("true").start().waitFor()
       df.write.parquet(dir.resolve("table").toString)
       val fs = FileSystem.get(dir.toUri, conf)
-      fs.create(new Path(path(dir), "_built")).close() // Stores.buildOnce's marker
+      fs.create(new Path(path(dir), graft.engine.Stores.Marker)).close() // a store's marker
       fs.mkdirs(new Path(path(dir), "a/b/c"))
     }
     assert(Files.exists(dir.resolve("table/_SUCCESS")))

@@ -1047,7 +1047,7 @@ class StreamingSpec extends SparkSpec {
     val base = graft.functions.SigIndex.stageOnce(spark, sf)
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(base, "_GRAFT_SIG_OK")
+    val marker = new org.apache.hadoop.fs.Path(base, graft.engine.Stores.Marker)
     val mtime0 = fs.getFileStatus(marker).getModificationTime
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_spec").toString
     val h = PipelineDemo.build(spark, sf, batches = 2, batchSize = 100, outDir = out)
