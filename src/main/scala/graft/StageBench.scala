@@ -47,6 +47,7 @@ object StageBench {
     timed("build shingle store") { SigIndex.stageShingles(spark, sfDir) }
     timed("build vlsh bucket store") { SigIndex.stageEmbLsh(spark, sfDir) }
     timed("build bm25 postings") { SigIndex.stageBm25(spark, sfDir) }
+    timed("build bpe merges") { SigIndex.stageBpe(spark, sfDir) }
     timed("build cluster map (CC)") { SigIndex.stageClusters(spark, sfDir) }
     timed("build ann (ivf+pq+ivfpq)") { AnnIndex.stageOnce(spark, sfDir) }
     timed("build ann auto (cells=√n)") { AnnIndex.stageAuto(spark, sfDir) }

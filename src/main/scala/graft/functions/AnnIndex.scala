@@ -204,10 +204,9 @@ object AnnIndex {
                        nprobe: Int = Nprobe,
                        batches: Seq[(Column, String)] = defaultBatches): DataFrame = {
     val base = stageIncrBase(spark, dir)
-    ivfServe(spark, dir,
-      Tables.parquet(spark, s"$base/ivf_centroids"),
-      mergedArtifact(spark, dir, "ivf_postings", batches),
-      queryPred, k, nprobe)
+    Similarity.ivfSearchAssigned(members(mergedArtifact(spark, dir, "ivf_postings", batches)),
+      Tables.embeddings(spark, dir).filter(queryPred),
+      Tables.parquet(spark, s"$base/ivf_centroids"), "vec_id", "embedding", k, nprobe)
   }
 
   /** ADC top-k over the MERGED incremental code store (base codes ∪ the
@@ -218,10 +217,9 @@ object AnnIndex {
   def pqKnnStagedIncr(spark: SparkSession, dir: String, queryPred: Column, k: Int,
                       batches: Seq[(Column, String)] = defaultBatches): DataFrame = {
     val base = stageIncrBase(spark, dir)
-    pqServe(spark, dir,
-      Tables.parquet(spark, s"$base/pq_codebook"),
-      mergedArtifact(spark, dir, "pq_codes", batches),
-      queryPred, k)
+    Similarity.adcSearch(candidates(mergedArtifact(spark, dir, "pq_codes", batches)),
+      querySlices(spark, dir, queryPred),
+      Tables.parquet(spark, s"$base/pq_codebook"), Seq("m", "code"), k)
   }
 
   /** Index drift monitor over the STORED incremental index — the
@@ -258,10 +256,9 @@ object AnnIndex {
   def knnIvfStaged(spark: SparkSession, dir: String, queryPred: Column, k: Int,
                    nprobe: Int = Nprobe): DataFrame = {
     val base = stageOnce(spark, dir)
-    ivfServe(spark, dir,
-      Tables.parquet(spark, s"$base/ivf_centroids"),
-      Tables.parquet(spark, s"$base/ivf_postings"),
-      queryPred, k, nprobe)
+    Similarity.ivfSearchAssigned(members(Tables.parquet(spark, s"$base/ivf_postings")),
+      Tables.embeddings(spark, dir).filter(queryPred),
+      Tables.parquet(spark, s"$base/ivf_centroids"), "vec_id", "embedding", k, nprobe)
   }
 
   /** Hard-negative mining served from the STORED IVF index — the
@@ -283,121 +280,49 @@ object AnnIndex {
   def hardNegativesStaged(spark: SparkSession, dir: String, queryPred: Column,
                           k: Int, nprobe: Int = Nprobe): DataFrame = {
     val base = stageOnce(spark, dir)
-    val centroids = Tables.parquet(spark, s"$base/ivf_centroids")
-    val postings = Tables.parquet(spark, s"$base/ivf_postings")
-      .withColumn("cell", col("cell").cast("long"))
     val labels = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
-    val cn = Similarity.withNorm(postings, "vec_id", "embedding", passthrough = Seq("cell"))
-      .join(labels, Seq("vec_id"))
-      .select(col("vec_id").as("n_id"), col("v").as("vn"), col("nrm").as("nn"),
-        col("cell"), col("label").as("n_label"))
-    val qnorm = Similarity.withNorm(
-      Tables.embeddings(spark, dir).filter(queryPred), "vec_id", "embedding",
-      passthrough = Seq("label"))
-    val qn = qnorm
-      .select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq"),
-        col("label").as("q_label"))
-      .join(probeCells(qnorm, centroids, nprobe), Seq("q_id"))
-    val scored = cn.join(broadcast(qn), Seq("cell"))
-      .filter(col("n_id") =!= col("q_id") && col("n_label") =!= col("q_label"))
-      .select(col("q_id"), col("n_id"), col("n_label"),
-        (Similarity.dot(col("vq"), col("vn")) / (col("nq") * col("nn"))).as("cs"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cs").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("n_label").cast("int").as("n_label"),
-        round(col("cs"), 4).as("cos_sim"), col("rank"))
+    // cell cast to long before the probe meets it: pruning still applies,
+    // through a cast of the partition column
+    Similarity.ivfSearchAssigned(
+      members(Tables.parquet(spark, s"$base/ivf_postings")
+        .withColumn("cell", col("cell").cast("long"))).join(labels, Seq("vec_id")),
+      Tables.embeddings(spark, dir).filter(queryPred),
+      Tables.parquet(spark, s"$base/ivf_centroids"), "vec_id", "embedding", k, nprobe,
+      pairFilter = Some(col("n_label") =!= col("q_label")))
   }
 
-  /** The IVF serve plan over an arbitrary stored centroid/postings pair —
-    * shared by the build-once ([[knnIvfStaged]]) and base+delta
-    * ([[knnIvfStagedIncr]]) stores; both hand in frames read straight
-    * from parquet, so the plan stays training-lineage-free either way.
+  /** Stored postings (vec_id, embedding, cell) as the cell members
+    * [[Similarity.ivfSearchAssigned]] scores.
     */
-  /** Nearest-centroid probe assignment for a normalized query frame:
-    * (q_id, cell) rows, nprobe cells per query, broadcast centroids,
-    * cell-asc tie-break — shared by [[ivfServe]] and
-    * [[hardNegativesStaged]] so every staged consumer probes
-    * identically.
-    */
-  private def probeCells(qnorm: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame = {
-    val cwithNrm = centroids
-      .withColumn("cnrm", sqrt(Similarity.dot(col("cv"), col("cv"))))
-    qnorm.crossJoin(broadcast(cwithNrm))
-      .withColumn("sim", Similarity.dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cell").asc)))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("q_id"), col("cell"))
-  }
+  private def members(postings: DataFrame): DataFrame =
+    Similarity.withNorm(postings, "vec_id", "embedding", passthrough = Seq("cell"))
 
-  private def ivfServe(spark: SparkSession, dir: String, centroids: DataFrame,
-                       rawPostings: DataFrame, queryPred: Column, k: Int,
-                       nprobe: Int): DataFrame = {
-    // the probe side casts DOWN to the store's partition-column type
-    // (int, from hive directory inference) instead of casting the scan
-    // side up to long: a cast on the scan's join key is an expression
-    // over the partition column, which disqualifies DYNAMIC PARTITION
-    // PRUNING — with the bare attribute, the broadcast probe's cell
-    // values prune unprobed cell directories at the scan (nprobe/cells
-    // of the corpus read, the fraction the geometry rule promises)
-    val cn = Similarity.withNorm(rawPostings, "vec_id", "embedding",
-        passthrough = Seq("cell"))
-      .select(col("vec_id").as("n_id"), col("v").as("vn"), col("nrm").as("nn"), col("cell"))
-    val qnorm = Similarity.withNorm(
-      Tables.embeddings(spark, dir).filter(queryPred), "vec_id", "embedding")
-    val qn = qnorm
-      .select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq"))
-      .join(probeCells(qnorm, centroids, nprobe)
-        .withColumn("cell", col("cell").cast("int")), Seq("q_id"))
-    val scored = cn.join(broadcast(qn), Seq("cell"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        (Similarity.dot(col("vq"), col("vn")) / (col("nq") * col("nn"))).as("cs"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cs").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), round(col("cs"), 4).as("cos_sim"), col("rank"))
-  }
+  /** Stored PQ codes (vec_id, m, code) as [[Similarity.adcSearch]]
+    * candidates.
+    */
+  private def candidates(codes: DataFrame): DataFrame =
+    codes.select(col("vec_id").as("n_id"), col("m"), col("code"))
+
+  /** The queried vectors' PQ slices (q_id, m, sv) for
+    * [[Similarity.adcSearch]].
+    */
+  private def querySlices(spark: SparkSession, dir: String, queryPred: Column): DataFrame =
+    Similarity.pqSubVectors(
+      Tables.embeddings(spark, dir).filter(queryPred), "vec_id", "embedding", NumSub, SubDim)
+      .select(col("vec_id").as("q_id"), col("m"), col("sv"))
 
   /** PQ ADC top-k search against the STORED index: the corpus exists in
     * this plan ONLY as 8-byte codes; full-precision vectors are touched
     * solely on the (small, filtered) query side, to build each query's
-    * numSub × numCodes distance table. Same search math as
-    * [[Similarity.pqKnn]], zero training lineage.
+    * numSub × numCodes distance table. The search is
+    * [[Similarity.adcSearch]], which [[Similarity.pqKnn]] runs over
+    * inline-trained codes; here with zero training lineage.
     */
   def pqKnnStaged(spark: SparkSession, dir: String, queryPred: Column, k: Int): DataFrame = {
     val base = stageOnce(spark, dir)
-    pqServe(spark, dir,
-      Tables.parquet(spark, s"$base/pq_codebook"),
-      Tables.parquet(spark, s"$base/pq_codes"),
-      queryPred, k)
-  }
-
-  /** The ADC serve plan over an arbitrary stored codebook/codes pair —
-    * shared by the build-once ([[pqKnnStaged]]) and base+delta
-    * ([[pqKnnStagedIncr]]) stores.
-    */
-  private def pqServe(spark: SparkSession, dir: String, cb: DataFrame,
-                      rawCodes: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    val codes = rawCodes.select(col("vec_id").as("n_id"), col("m"), col("code"))
-    val qSub = Similarity.pqSubVectors(
-      Tables.embeddings(spark, dir).filter(queryPred), "vec_id", "embedding", NumSub, SubDim)
-      .select(col("vec_id").as("q_id"), col("m"), col("sv"))
-    val d2 = Similarity.dot(col("sv"), col("sv")) -
-      lit(2.0) * Similarity.dot(col("sv"), col("cv")) +
-      Similarity.dot(col("cv"), col("cv"))
-    val dtab = qSub.join(broadcast(cb), Seq("m"))
-      .select(col("q_id"), col("m"), col("code"),
-        floor(d2 * lit(1e9)).cast("long").as("d2q"))
-    val scored = codes.join(broadcast(dtab), Seq("m", "code"))
-      .filter(col("n_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("n_id"))
-      .agg((sum(col("d2q")).cast("double") / lit(1e9)).as("adist"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist").asc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), round(col("adist"), 4).as("adist"), col("rank"))
+    Similarity.adcSearch(candidates(Tables.parquet(spark, s"$base/pq_codes")),
+      querySlices(spark, dir, queryPred),
+      Tables.parquet(spark, s"$base/pq_codebook"), Seq("m", "code"), k)
   }
 
   /** PQ reconstruction-error QA over the stored index — pins PQ quality
@@ -433,9 +358,7 @@ object AnnIndex {
     * floor(d2·10⁹) integers — shared by the staged and inline variants.
     */
   private def pqMse(sub: DataFrame, codes: DataFrame, cb: DataFrame): DataFrame = {
-    val d2 = Similarity.dot(col("sv"), col("sv")) -
-      lit(2.0) * Similarity.dot(col("sv"), col("cv")) +
-      Similarity.dot(col("cv"), col("cv"))
+    val d2 = Similarity.sqL2(col("sv"), col("cv"))
     sub.join(codes.select(col("vec_id"), col("m"), col("code")), Seq("vec_id", "m"))
       .join(broadcast(cb), Seq("m", "code"))
       .select(col("m"), floor(d2 * lit(1e9)).cast("long").as("d2q"))
@@ -455,8 +378,8 @@ object AnnIndex {
     */
   def pqKnnRerankStaged(spark: SparkSession, dir: String, queryPred: Column, k: Int,
                         shortlist: Int = 40): DataFrame =
-    exactRerank(spark, dir,
-      pqKnnStaged(spark, dir, queryPred, shortlist).select(col("q_id"), col("n_id")), k)
+    Similarity.exactRerank(pqKnnStaged(spark, dir, queryPred, shortlist),
+      Tables.embeddings(spark, dir), "vec_id", "embedding", k)
 
   /** The same two-stage serve over the composed IVF-PQ store: shortlist
     * from [[ivfPqKnnStaged]] (cell-probed ADC over stored residual
@@ -468,28 +391,8 @@ object AnnIndex {
     */
   def ivfPqKnnRerankStaged(spark: SparkSession, dir: String, queryPred: Column, k: Int,
                            shortlist: Int = 40): DataFrame =
-    exactRerank(spark, dir,
-      ivfPqKnnStaged(spark, dir, queryPred, shortlist).select(col("q_id"), col("n_id")), k)
-
-  /** Exact full-precision squared-L2 re-rank of an ADC shortlist —
-    * quantized floor(d2·10⁹) so ranking is engine-portable; full vectors
-    * are read for shortlist rows only, never corpus-wide.
-    */
-  private def exactRerank(spark: SparkSession, dir: String, adc: DataFrame, k: Int): DataFrame = {
-    val full = Similarity.withNorm(Tables.embeddings(spark, dir), "vec_id", "embedding")
-    val qv = full.select(col("vec_id").as("q_id"), col("v").as("vq"))
-    val nv = full.select(col("vec_id").as("n_id"), col("v").as("vn"))
-    val d2 = Similarity.dot(col("vq"), col("vq")) -
-      lit(2.0) * Similarity.dot(col("vq"), col("vn")) +
-      Similarity.dot(col("vn"), col("vn"))
-    val exact = adc.join(qv, Seq("q_id")).join(nv, Seq("n_id"))
-      .select(col("q_id"), col("n_id"), floor(d2 * lit(1e9)).cast("long").as("d2q"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("d2q").asc, col("n_id").asc)
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"),
-        round(col("d2q").cast("double") / lit(1e9), 4).as("dist"), col("rank"))
-  }
+    Similarity.exactRerank(ivfPqKnnStaged(spark, dir, queryPred, shortlist),
+      Tables.embeddings(spark, dir), "vec_id", "embedding", k)
 
   /** Residual (IVF-PQ) reconstruction-error QA over the stored index —
     * the quantitative case for encoding residuals instead of raw
@@ -506,9 +409,7 @@ object AnnIndex {
     val postings = Tables.parquet(spark, s"$base/ivf_postings")
     val cent = Tables.parquet(spark, s"$base/ivf_centroids")
     val resid = postings.join(broadcast(cent), Seq("cell"))
-      .select(col("vec_id"),
-        zip_with(col("embedding"), col("cv"),
-          (x, y) => x.cast("double") - y.cast("double")).as("rv"))
+      .select(col("vec_id"), IvfPq.residual(col("embedding")).as("rv"))
     val rsub = Similarity.pqSubVectors(resid, "vec_id", "rv", NumSub, SubDim)
     val rcodes = Tables.parquet(spark, s"$base/ivfpq_codes")
     val rcb = Tables.parquet(spark, s"$base/ivfpq_codebook")
@@ -522,9 +423,7 @@ object AnnIndex {
     s"""${IvfPq.sqlPrefix(NumCells, NumSub, NumCodes, Dim, iters)},
        |err AS (
        |  SELECT s.m,
-       |         CAST(floor((list_inner_product(s.sv, s.sv)
-       |                     - 2 * list_inner_product(s.sv, c.cv)
-       |                     + list_inner_product(c.cv, c.cv)) * 1000000000.0) AS BIGINT) AS d2q
+       |         ${Similarity.d2qSql("s.sv", "c.cv")}
        |  FROM rsub s
        |    JOIN rcodes co ON co.vec_id = s.vec_id AND co.m = s.m
        |    JOIN rcb c ON c.m = co.m AND c.code = co.code)
@@ -553,49 +452,24 @@ object AnnIndex {
   }
 
   /** IVF-PQ top-k search against the STORED index — the full production
-    * serving shape ([[IvfPq.ivfPqKnn]] is the inline oracle twin): probe
-    * `nprobe` cells against the stored centroids, rebuild each query's
-    * per-probed-cell residual, ADC-score ONLY the probed cells' stored
-    * residual codes. The corpus appears in this plan exclusively as
-    * (cell, 8-byte code) rows; no Lloyd lineage anywhere
-    * (PlanAuditSpec-asserted).
+    * serving shape; [[IvfPq.ivfPqKnn]] runs the same search over
+    * inline-trained artifacts: probe `nprobe` cells against the stored
+    * centroids, rebuild each query's per-probed-cell residual, ADC-score
+    * ONLY the probed cells' stored residual codes. The corpus appears in
+    * this plan exclusively as (cell, 8-byte code) rows; no Lloyd lineage
+    * anywhere (PlanAuditSpec-asserted).
     */
   def ivfPqKnnStaged(spark: SparkSession, dir: String, queryPred: Column, k: Int,
                      nprobe: Int = Nprobe): DataFrame = {
     val base = stageOnce(spark, dir)
-    val centroids = Tables.parquet(spark, s"$base/ivf_centroids")
-    val rcb = Tables.parquet(spark, s"$base/ivfpq_codebook")
     val cand = Tables.parquet(spark, s"$base/ivfpq_codes")
       .select(col("vec_id").as("n_id"), col("cell").cast("long").as("cell"),
         col("m"), col("code"))
-    val qn = Similarity.withNorm(
-      Tables.embeddings(spark, dir).filter(queryPred), "vec_id", "embedding")
-    val cn = centroids.withColumn("cnrm", sqrt(Similarity.dot(col("cv"), col("cv"))))
-    val qc = qn.crossJoin(broadcast(cn))
-      .withColumn("sim", Similarity.dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cell").asc)))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("q_id"), col("cell"),
-        zip_with(col("v"), col("cv"),
-          (x, y) => x.cast("double") - y.cast("double")).as("rv"))
-    val qsub = qc.select(col("q_id"), col("cell"),
-      posexplode(array((0 until NumSub).map(m => slice(col("rv"), m * SubDim + 1, SubDim)): _*))
-        .as(Seq("m", "sv")))
-    val d2 = Similarity.dot(col("sv"), col("sv")) -
-      lit(2.0) * Similarity.dot(col("sv"), col("cv")) +
-      Similarity.dot(col("cv"), col("cv"))
-    val dtab = qsub.join(broadcast(rcb), Seq("m"))
-      .select(col("q_id"), col("cell"), col("m"), col("code"),
-        floor(d2 * lit(1e9)).cast("long").as("d2q"))
-    val scored = cand.join(broadcast(dtab), Seq("cell", "m", "code"))
-      .filter(col("n_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("n_id"))
-      .agg((sum(col("d2q")).cast("double") / lit(1e9)).as("adist"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist").asc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), round(col("adist"), 4).as("adist"), col("rank"))
+    Similarity.adcSearch(cand,
+      IvfPq.querySlices(Tables.embeddings(spark, dir).filter(queryPred),
+        Tables.parquet(spark, s"$base/ivf_centroids"), "vec_id", "embedding",
+        nprobe, NumSub, SubDim),
+      Tables.parquet(spark, s"$base/ivfpq_codebook"), Seq("cell", "m", "code"), k)
   }
 
   /** SemDeDup-style semantic dedup over the STORED IVF cells: candidate
@@ -771,10 +645,10 @@ object AnnIndex {
   def knnIvfAutoStaged(spark: SparkSession, dir: String, queryPred: Column,
                        k: Int): DataFrame = {
     val (base, cells) = stageAuto(spark, dir)
-    ivfServe(spark, dir,
-      Tables.parquet(spark, s"$base/ivf_centroids"),
-      Tables.parquet(spark, s"$base/ivf_postings"),
-      queryPred, k, Similarity.ivfNprobeFor(cells))
+    Similarity.ivfSearchAssigned(members(Tables.parquet(spark, s"$base/ivf_postings")),
+      Tables.embeddings(spark, dir).filter(queryPred),
+      Tables.parquet(spark, s"$base/ivf_centroids"), "vec_id", "embedding",
+      k, Similarity.ivfNprobeFor(cells))
   }
 
   /** SemDeDup over the CORPUS-SIZED store — [[semDedup]]'s blocking at
@@ -819,9 +693,7 @@ object AnnIndex {
     s"""${Similarity.pqSqlPrefix(NumSub, NumCodes, Dim, iters)},
        |err AS (
        |  SELECT s.m,
-       |         CAST(floor((list_inner_product(s.sv, s.sv)
-       |                     - 2 * list_inner_product(s.sv, c.cv)
-       |                     + list_inner_product(c.cv, c.cv)) * 1000000000.0) AS BIGINT) AS d2q
+       |         ${Similarity.d2qSql("s.sv", "c.cv")}
        |  FROM sub s
        |    JOIN codes co ON co.vec_id = s.vec_id AND co.m = s.m
        |    JOIN cb c ON c.m = co.m AND c.code = co.code)

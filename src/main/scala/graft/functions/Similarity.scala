@@ -153,9 +153,7 @@ object Similarity {
         out.result()
       }.toDF("q_id", "n_id", "cs")
     }
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cs").desc, col("n_id").asc)
-    pruned.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(pruned, k, col("cs").desc, col("n_id").asc)
       .select(col("q_id"), col("n_id"), round(col("cs"), 4).as("cos_sim"), col("rank"))
   }
 
@@ -259,9 +257,10 @@ object Similarity {
     *
     * Scale shape: same as knn — the query batch broadcasts (mining runs
     * per training batch, a few thousand anchors), the corpus streams;
-    * per-query top-k is a bounded window. At full-corpus scale swap the
-    * scored cross join for the IVF shortlist ([[knnIvf]]) and keep the
-    * same label-mismatch filter + window — nothing else changes.
+    * per-query top-k is a bounded window. At full-corpus scale the IVF
+    * scorer takes the same label-mismatch filter
+    * ([[ivfSearchAssigned]]'s `pairFilter`, served by
+    * [[AnnIndex.hardNegativesStaged]]).
     */
   def hardNegatives(emb: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, labelCol: String, k: Int): DataFrame = {
@@ -292,9 +291,7 @@ object Similarity {
       .filter(col("n_label") =!= col("q_label"))
       .select(col("q_id"), col("n_id"), col("n_label"),
         (dot(col("vq"), col("vn")) / (col("nq") * col("nn"))).as("cs"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cs").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, k, col("cs").desc, col("n_id").asc)
       .select(col("q_id"), col("n_id"), col("n_label").cast("int").as("n_label"),
         round(col("cs"), 4).as("cos_sim"), col("rank"))
   }
@@ -381,9 +378,7 @@ object Similarity {
     val scored = corpus.join(broadcast(qn), col("bucket") === col("probe") && col("n_id") =!= col("q_id"))
       .select(col("q_id"), col("n_id"),
         (dot(col("vq"), col("vn")) / (col("nq") * col("nn"))).as("cs"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cs").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, k, col("cs").desc, col("n_id").asc)
       .select(col("q_id"), col("n_id"), round(col("cs"), 4).as("cos_sim"), col("rank"))
   }
 
@@ -523,9 +518,8 @@ object Similarity {
     val e = widenToSession(withNorm(emb, idCol, vecCol), emb)
     val probed = e.crossJoin(broadcast(bArr))
       .select(col(idCol), col("v"), col("nrm"),
-        explode(slice(array_sort(transform(col("bs"), b =>
-          struct((-dot(col("v"), b.getField("bv")) / (col("nrm") * b.getField("bnrm")))
-            .as("negsim"), b.getField("branch").as("branch")))), 1, branchProbe)).as("pr"))
+        explode(slice(nearestFirst(col("bs"), col("v"), col("nrm"), "branch", "bv", "bnrm"),
+          1, branchProbe)).as("pr"))
       .select(col(idCol), col("v"), col("nrm"), col("pr.branch").as("branch"))
     val assigned = probed.join(broadcast(cfull), Seq("branch"))
       .withColumn("sim", dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
@@ -634,8 +628,8 @@ object Similarity {
         assignCellsHier(emb, centroids, idCol, vecCol,
           hierBranchesFor(cells), AnnIndex.HierBranchProbe)
       else assignCells(emb, centroids, idCol, vecCol)).persist()
-    ivfSearchAssigned(corpus, emb.filter(queryPred), centroids, idCol, vecCol,
-      k, ivfNprobeFor(cells))
+    ivfSearchAssigned(withNorm(corpus, idCol, vecCol, passthrough = Seq("cell")),
+      emb.filter(queryPred), centroids, idCol, vecCol, k, ivfNprobeFor(cells))
   }
 
   /** IVF top-k search: score queries only against their `nprobe` nearest
@@ -753,44 +747,135 @@ object Similarity {
   private[graft] def ivfSearch(emb: DataFrame, centroids: DataFrame, queryPred: Column,
                         idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
     val corpus = assignCells(emb, centroids, idCol, vecCol).persist()
-    ivfSearchAssigned(corpus, emb.filter(queryPred), centroids, idCol, vecCol, k, nprobe)
+    ivfSearchAssigned(withNorm(corpus, idCol, vecCol, passthrough = Seq("cell")),
+      emb.filter(queryPred), centroids, idCol, vecCol, k, nprobe)
   }
 
-  /** The serve half of [[ivfSearch]] over an ALREADY-ASSIGNED corpus
-    * (id, vector, cell) from any provenance — inline [[assignCells]],
-    * hierarchical [[assignCellsHier]], or staged postings. Exposed
-    * separately so assignment-policy A/Bs score the SAME probe over
-    * competing assignments (BASELINE.md, round-13 hierarchical-assignment
-    * row).
+  // ---- the ANN search kernel (ARCHITECTURE.md design rule 13) ----
+  // Every IVF, PQ and IVF-PQ serve, inline-trained or staged, runs these
+  // steps; a serve only supplies its centroids, codebook, codes or
+  // postings and its queries.
+
+  /** Top-`k` rows per `q_id` in `order`, numbered by a 1-based `rank`. */
+  private[graft] def topKPerQuery(scored: DataFrame, k: Int, order: Column*): DataFrame =
+    scored.withColumn("rank", row_number().over(Window.partitionBy(col("q_id")).orderBy(order: _*)))
+      .filter(col("rank") <= k)
+
+  /** Squared L2 distance |a|² − 2·a·b + |b|² in double. */
+  private[graft] def sqL2(a: Column, b: Column): Column =
+    dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
+
+  /** The IVF cell probe: the `nprobe` centroids nearest each query by
+    * cosine (sim desc, cell asc), as (q_id, cell) rows followed by `keep`,
+    * columns over the probed (query, centroid) row such as IVF-PQ's query
+    * residual. `qnorm` is a [[withNorm]] frame keyed by `idCol`; the
+    * centroid table (cell, cv) is broadcast.
     */
-  private[graft] def ivfSearchAssigned(corpus: DataFrame, queries: DataFrame,
-                        centroids: DataFrame,
-                        idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    val cn = withNorm(corpus, idCol, vecCol, passthrough = Seq("cell"))
-      .select(col(idCol).as("n_id"), col("v").as("vn"), col("nrm").as("nn"), col("cell"))
-    // nprobe nearest cells per query: norms attached once per side
-    val qnorm = withNorm(queries, idCol, vecCol)
-    val cwithNrm = centroids.withColumn("cnrm", sqrt(dot(col("cv"), col("cv"))))
-    val qcells = qnorm.crossJoin(broadcast(cwithNrm))
+  private[graft] def probeCells(qnorm: DataFrame, centroids: DataFrame, idCol: String,
+                                nprobe: Int, keep: Column*): DataFrame =
+    qnorm.crossJoin(broadcast(centroids.withColumn("cnrm", sqrt(dot(col("cv"), col("cv"))))))
       .withColumn("sim", dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col(idCol)).orderBy(col("sim").desc, col("cell").asc)))
       .filter(col("rn") <= nprobe)
-      .select(col(idCol).as("q_id"), col("cell"))
+      .select(Seq(col(idCol).as("q_id"), col("cell")) ++ keep: _*)
+
+  /** [[probeCells]] as one expression, for plans where a rank window
+    * cannot run (streams) or would sort every vector × cell pair: the
+    * structs of `arr` (an `id`, a vector `vec` and its norm `norm`) as
+    * struct(negsim, id), nearest to `v` first. Sorting on (−sim, id) is
+    * the window's (sim desc, cell asc).
+    */
+  private[graft] def nearestFirst(arr: Column, v: Column, nrm: Column,
+                                  id: String, vec: String, norm: String): Column =
+    array_sort(transform(arr, c =>
+      struct((-dot(v, c.getField(vec)) / (nrm * c.getField(norm))).as("negsim"),
+        c.getField(id).as(id))))
+
+  /** The one cosine scorer over probed cells: probe each query's `nprobe`
+    * nearest `centroids`, score the members of those cells, rank top-`k`.
+    *
+    * `members` is the assigned corpus with norms, as [[withNorm]] gives it
+    * with `cell` passed through: inline [[assignCells]] or
+    * [[assignCellsHier]] output, or staged postings. Its other columns
+    * are per-neighbour attributes, carried as `n_<name>` into the output;
+    * the query frame's other columns are carried as `q_<name>`. Both are
+    * there for `pairFilter`, which drops (query, neighbour) pairs before
+    * the ranking, e.g. hard negatives' label mismatch. The probe's cell
+    * is cast to the members' `cell` type: a staged store's int partition
+    * column then meets the probe bare, so dynamic partition pruning reads
+    * only the probed cells' files.
+    */
+  private[graft] def ivfSearchAssigned(members: DataFrame, queries: DataFrame,
+                        centroids: DataFrame, idCol: String, vecCol: String,
+                        k: Int, nprobe: Int, pairFilter: Option[Column] = None): DataFrame = {
+    val nAttrs = members.columns.toSeq.filterNot(Set(idCol, "v", "nrm", "cell"))
+    val qAttrs = queries.columns.toSeq.filterNot(Set(idCol, vecCol))
+    val nOut = nAttrs.map(a => col("n_" + a))
+    val cn = members.select(Seq(col(idCol).as("n_id"), col("v").as("vn"), col("nrm").as("nn"),
+      col("cell")) ++ nAttrs.map(a => col(a).as("n_" + a)): _*)
+    // norms attached once per side
+    val qnorm = withNorm(queries, idCol, vecCol, passthrough = qAttrs)
     val qn = qnorm
-      .select(col(idCol).as("q_id"), col("v").as("vq"), col("nrm").as("nq"))
-      .join(qcells, Seq("q_id"))
-    val scored = cn.join(broadcast(qn), Seq("cell"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        (dot(col("vq"), col("vn")) / (col("nq") * col("nn"))).as("cs"))
+      .select(Seq(col(idCol).as("q_id"), col("v").as("vq"), col("nrm").as("nq")) ++
+        qAttrs.map(a => col(a).as("q_" + a)): _*)
+      .join(probeCells(qnorm, centroids, idCol, nprobe)
+        .withColumn("cell", col("cell").cast(cn.schema("cell").dataType)), Seq("q_id"))
+    val notSelf = col("n_id") =!= col("q_id")
     // no dedup needed: each corpus vector lives in exactly one cell and
-    // qcells probes distinct cells, so a (q_id, n_id) pair matches once
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cs").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), round(col("cs"), 4).as("cos_sim"), col("rank"))
+    // the probe returns distinct cells, so a (q_id, n_id) pair matches once
+    val scored = cn.join(broadcast(qn), Seq("cell"))
+      .filter(pairFilter.fold(notSelf)(notSelf && _))
+      .select(Seq(col("q_id"), col("n_id")) ++ nOut :+
+        (dot(col("vq"), col("vn")) / (col("nq") * col("nn"))).as("cs"): _*)
+    topKPerQuery(scored, k, col("cs").desc, col("n_id").asc)
+      .select(Seq(col("q_id"), col("n_id")) ++ nOut ++
+        Seq(round(col("cs"), 4).as("cos_sim"), col("rank")): _*)
+  }
+
+  /** PQ search by asymmetric distance computation: per query slice, the
+    * quantized squared-L2 table against every `codebook` entry (m, code,
+    * cv), then per candidate the sum of the entries its codes select, and
+    * the top-`k` smallest sums. `qsub` holds the query slices (q_id, the
+    * keys but code, sv), `cand` the candidates' codes (n_id, keys): the
+    * keys are (m, code) for PQ and (cell, m, code) for IVF-PQ, whose
+    * table is per (query, probed cell).
+    */
+  private[graft] def adcSearch(cand: DataFrame, qsub: DataFrame, codebook: DataFrame,
+                               keys: Seq[String], k: Int): DataFrame = {
+    val d2 = sqL2(col("sv"), col("cv"))
+    // table entries quantize to floor(d2·10⁹) integers BEFORE the sum — a
+    // raw double sum merges shuffled partials in nondeterministic order
+    // and a last-ulp difference could flip a near-tie rank
+    val dtab = qsub.join(broadcast(codebook), Seq("m"))
+      .select((col("q_id") +: keys.map(col)) :+ floor(d2 * lit(1e9)).cast("long").as("d2q"): _*)
+    // per (query, neighbor, subspace) exactly one table row matches, so
+    // the sum always covers all numSub subspaces
+    val scored = cand.join(broadcast(dtab), keys)
+      .filter(col("n_id") =!= col("q_id"))
+      .groupBy(col("q_id"), col("n_id"))
+      .agg((sum(col("d2q")).cast("double") / lit(1e9)).as("adist"))
+    topKPerQuery(scored, k, col("adist").asc, col("n_id").asc)
+      .select(col("q_id"), col("n_id"), round(col("adist"), 4).as("adist"), col("rank"))
+  }
+
+  /** The exact re-rank of a shortlist (q_id, n_id, …): full-precision
+    * squared L2 from `emb`'s vectors, quantized to floor(d2·10⁹) so the
+    * ranking is engine-portable, top-`k` per query. Full vectors are read
+    * for shortlist rows only.
+    */
+  private[graft] def exactRerank(shortlist: DataFrame, emb: DataFrame, idCol: String,
+                                 vecCol: String, k: Int): DataFrame = {
+    val full = withNorm(emb, idCol, vecCol)
+    val qv = full.select(col(idCol).as("q_id"), col("v").as("vq"))
+    val nv = full.select(col(idCol).as("n_id"), col("v").as("vn"))
+    val d2 = sqL2(col("vq"), col("vn"))
+    val exact = shortlist.select(col("q_id"), col("n_id"))
+      .join(qv, Seq("q_id")).join(nv, Seq("n_id"))
+      .select(col("q_id"), col("n_id"), floor(d2 * lit(1e9)).cast("long").as("d2q"))
+    topKPerQuery(exact, k, col("d2q").asc, col("n_id").asc)
+      .select(col("q_id"), col("n_id"),
+        round(col("d2q").cast("double") / lit(1e9), 4).as("dist"), col("rank"))
   }
 
   /** The unrolled Lloyd loop of the IVF oracle: iteration i assigns every
@@ -853,6 +938,20 @@ object Similarity {
        |    FROM n CROSS JOIN cn c) WHERE rn = 1)""".stripMargin
   }
 
+  /** [[probeCells]] in SQL: the queries `q` (rows of `n` matching
+    * `queryPredSql`) and their `nprobe` nearest cells `qc` of the trained
+    * centroids `cn`. Ends with its trailing comma.
+    */
+  private[functions] def probeSql(queryPredSql: String, nprobe: Int): String =
+    s"""q AS (SELECT vec_id AS q_id, v, nrm FROM n WHERE $queryPredSql),
+       |qc AS (
+       |  SELECT q_id, cell FROM (
+       |    SELECT q.q_id, c.cell,
+       |           row_number() OVER (PARTITION BY q.q_id
+       |             ORDER BY list_inner_product(q.v, c.cv) / (q.nrm * c.cnrm) DESC,
+       |                      c.cell ASC) AS rn
+       |    FROM q CROSS JOIN cn c) WHERE rn <= $nprobe),""".stripMargin
+
   /** DuckDB twin of [[knnIvf]] at the registered configurations: seeds =
     * first `numCells` vectors by id, then `iters` unrolled Lloyd
     * iterations — nearest-centroid assignment (cosine argmax, cell-id
@@ -866,14 +965,7 @@ object Similarity {
   def knnIvfSqlFor(numCells: Int, nprobe: Int, k: Int, queryPredSql: String,
                    iters: Int = 1, trainPredSql: Option[String] = None): String =
     s"""${ivfAssignSqlPrefix(numCells, iters, trainPredSql)},
-       |q AS (SELECT vec_id AS q_id, v, nrm FROM n WHERE $queryPredSql),
-       |qc AS (
-       |  SELECT q_id, cell FROM (
-       |    SELECT q.q_id, c.cell,
-       |           row_number() OVER (PARTITION BY q.q_id
-       |             ORDER BY list_inner_product(q.v, c.cv) / (q.nrm * c.cnrm) DESC,
-       |                      c.cell ASC) AS rn
-       |    FROM q CROSS JOIN cn c) WHERE rn <= $nprobe),
+       |${probeSql(queryPredSql, nprobe)}
        |scored AS (
        |  SELECT q.q_id, m.vec_id AS n_id,
        |         list_inner_product(q.v, m.v) / (q.nrm * m.nrm) AS cs
@@ -898,14 +990,7 @@ object Similarity {
   def hardNegativesIvfSqlFor(numCells: Int, nprobe: Int, k: Int,
                              queryPredSql: String, iters: Int = 1): String =
     s"""${ivfAssignSqlPrefix(numCells, iters)},
-       |q AS (SELECT vec_id AS q_id, v, nrm FROM n WHERE $queryPredSql),
-       |qc AS (
-       |  SELECT q_id, cell FROM (
-       |    SELECT q.q_id, c.cell,
-       |           row_number() OVER (PARTITION BY q.q_id
-       |             ORDER BY list_inner_product(q.v, c.cv) / (q.nrm * c.cnrm) DESC,
-       |                      c.cell ASC) AS rn
-       |    FROM q CROSS JOIN cn c) WHERE rn <= $nprobe),
+       |${probeSql(queryPredSql, nprobe)}
        |scored AS (
        |  SELECT q.q_id, m.vec_id AS n_id, lm.label AS n_label,
        |         list_inner_product(q.v, m.v) / (q.nrm * m.nrm) AS cs
@@ -964,13 +1049,15 @@ object Similarity {
        |WHERE rn <= $k""".stripMargin
 
   /** Per-(vector, subspace) slices for product quantization: subspace m
-    * carries dimensions [m·subDim, (m+1)·subDim).
+    * carries dimensions [m·subDim, (m+1)·subDim); `passthrough` columns
+    * are kept after the id.
     */
   private[graft] def pqSubVectors(emb: DataFrame, idCol: String, vecCol: String,
-                                      numSub: Int, subDim: Int): DataFrame =
-    emb.select(col(idCol),
+                                  numSub: Int, subDim: Int,
+                                  passthrough: Seq[String] = Nil): DataFrame =
+    emb.select((col(idCol) +: passthrough.map(col)) :+
       posexplode(array((0 until numSub).map(m => slice(col(vecCol), m * subDim + 1, subDim)): _*))
-        .as(Seq("m", "sv")))
+        .as(Seq("m", "sv")): _*)
 
   /** Nearest-code assignment per (vector, subspace): squared-L2 argmin,
     * computed ROW-LOCALLY by [[PqAssignCode]] against the whole codebook
@@ -1097,24 +1184,7 @@ object Similarity {
       .select(col(idCol).as("n_id"), col("m"), col("code")).persist()
     val qSub = sub.join(emb.filter(queryPred).select(col(idCol)), Seq(idCol))
       .select(col(idCol).as("q_id"), col("m"), col("sv"))
-    val d2 = dot(col("sv"), col("sv")) - lit(2.0) * dot(col("sv"), col("cv")) +
-      dot(col("cv"), col("cv"))
-    // table entries quantize to floor(d2·10⁹) integers BEFORE the sum — a
-    // raw double sum merges shuffled partials in nondeterministic order
-    // and a last-ulp difference could flip a near-tie rank
-    val dtab = qSub.join(broadcast(cb), Seq("m"))
-      .select(col("q_id"), col("m"), col("code"),
-        floor(d2 * lit(1e9)).cast("long").as("d2q"))
-    // per (query, neighbor, subspace) exactly one table row matches, so
-    // the sum always covers all numSub subspaces
-    val scored = codes.join(broadcast(dtab), Seq("m", "code"))
-      .filter(col("n_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("n_id"))
-      .agg((sum(col("d2q")).cast("double") / lit(1e9)).as("adist"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist").asc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), round(col("adist"), 4).as("adist"), col("rank"))
+    adcSearch(codes, qSub, cb, Seq("m", "code"), k)
   }
 
   /** PQ search with exact re-ranking — the production two-stage shape:
@@ -1128,37 +1198,35 @@ object Similarity {
     */
   def pqKnnRerank(emb: DataFrame, queryPred: Column, idCol: String, vecCol: String,
                   k: Int, shortlist: Int = 40, numSub: Int = 8, numCodes: Int = 16,
-                  dim: Int = 64, iters: Int = 1): DataFrame = {
-    val adc = pqKnn(emb, queryPred, idCol, vecCol, shortlist, numSub, numCodes, dim, iters)
-      .select(col("q_id"), col("n_id"))
-    val full = withNorm(emb, idCol, vecCol)
-    val qv = full.select(col(idCol).as("q_id"), col("v").as("vq"))
-    val nv = full.select(col(idCol).as("n_id"), col("v").as("vn"))
-    val d2 = dot(col("vq"), col("vq")) - lit(2.0) * dot(col("vq"), col("vn")) +
-      dot(col("vn"), col("vn"))
-    val exact = adc.join(qv, Seq("q_id")).join(nv, Seq("n_id"))
-      .select(col("q_id"), col("n_id"),
-        floor(d2 * lit(1e9)).cast("long").as("d2q"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("d2q").asc, col("n_id").asc)
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"),
-        round(col("d2q").cast("double") / lit(1e9), 4).as("dist"), col("rank"))
-  }
+                  dim: Int = 64, iters: Int = 1): DataFrame =
+    exactRerank(pqKnn(emb, queryPred, idCol, vecCol, shortlist, numSub, numCodes, dim, iters),
+      emb, idCol, vecCol, k)
 
   /** DuckDB twin of [[pqKnnRerank]]: the ADC shortlist query wrapped as a
     * CTE, full-precision quantized squared-L2 over the shortlist, top-k.
     */
   def pqKnnRerankSqlFor(numSub: Int, numCodes: Int, dim: Int, k: Int,
                         shortlist: Int, queryPredSql: String, iters: Int = 1): String =
+    rerankSql(pqKnnSqlFor(numSub, numCodes, dim, shortlist, queryPredSql, iters), k)
+
+  /** The quantized squared-L2 select item `d2q` of vectors `a` and `b`,
+    * aligned for a select list indented by 9 spaces.
+    */
+  private[functions] def d2qSql(a: String, b: String): String =
+    s"""CAST(floor((list_inner_product($a, $a)
+       |                     - 2 * list_inner_product($a, $b)
+       |                     + list_inner_product($b, $b)) * 1000000000.0) AS BIGINT) AS d2q""".stripMargin
+
+  /** [[exactRerank]] in SQL: the (q_id, n_id) rows of `shortlistSql`
+    * re-ranked by quantized full-precision squared L2, top-k.
+    */
+  private[functions] def rerankSql(shortlistSql: String, k: Int): String =
     s"""WITH shortlist AS (
-       |  SELECT q_id, n_id FROM (${pqKnnSqlFor(numSub, numCodes, dim, shortlist, queryPredSql, iters)})),
+       |  SELECT q_id, n_id FROM ($shortlistSql)),
        |ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |exact AS (
        |  SELECT s.q_id, s.n_id,
-       |         CAST(floor((list_inner_product(q.v, q.v)
-       |                     - 2 * list_inner_product(q.v, x.v)
-       |                     + list_inner_product(x.v, x.v)) * 1000000000.0) AS BIGINT) AS d2q
+       |         ${d2qSql("q.v", "x.v")}
        |  FROM shortlist s
        |    JOIN ev q ON q.vec_id = s.q_id
        |    JOIN ev x ON x.vec_id = s.n_id)
@@ -1254,16 +1322,24 @@ object Similarity {
                   trainPredSql: Option[String] = None): String =
     s"""${pqSqlPrefix(numSub, numCodes, dim, iters, trainPredSql)},
        |qsub AS (SELECT vec_id AS q_id, m, sv FROM sub WHERE $queryPredSql),
-       |dtab AS (
-       |  SELECT s.q_id, c.m, c.code,
-       |         CAST(floor((list_inner_product(s.sv, s.sv)
-       |                     - 2 * list_inner_product(s.sv, c.cv)
-       |                     + list_inner_product(c.cv, c.cv)) * 1000000000.0) AS BIGINT) AS d2q
-       |  FROM qsub s JOIN cb c ON c.m = s.m),
+       |${adcSql("", "cb", "codes co JOIN dtab d ON d.m = co.m AND d.code = co.code", k)}""".stripMargin
+
+  /** [[adcSearch]] in SQL over a `qsub` CTE (q_id, `qKeys`, m, sv): the
+    * quantized distance table `dtab` against `codebook`, the sums over
+    * `candidates` (a FROM list of codes `co` joined to `dtab d`) and the
+    * per-query top-k. `qKeys` is the select-list prefix of dtab's extra
+    * keys (IVF-PQ's "s.cell, "), empty for PQ.
+    */
+  private[functions] def adcSql(qKeys: String, codebook: String, candidates: String,
+                                k: Int): String =
+    s"""dtab AS (
+       |  SELECT s.q_id, ${qKeys}c.m, c.code,
+       |         ${d2qSql("s.sv", "c.cv")}
+       |  FROM qsub s JOIN $codebook c ON c.m = s.m),
        |scored AS (
        |  SELECT d.q_id, co.vec_id AS n_id,
        |         CAST(sum(d.d2q) AS DOUBLE) / 1000000000.0 AS adist
-       |  FROM codes co JOIN dtab d ON d.m = co.m AND d.code = co.code
+       |  FROM $candidates
        |  WHERE co.vec_id <> d.q_id
        |  GROUP BY 1, 2)
        |SELECT q_id, n_id, round(adist, 4) AS adist, CAST(rn AS INT) AS rank

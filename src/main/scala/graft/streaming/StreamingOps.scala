@@ -752,10 +752,10 @@ object StreamingOps {
     * streams — so here the probe is computed entirely in EXPRESSIONS:
     * the ≤4096-row centroid table aggregates to ONE static row holding
     * an array<struct<cell, cv, cnrm>>, the stream cross-joins that
-    * 1-row broadcast, and per query `slice(array_sort(transform(...)),
-    * 1, nprobe)` picks the nprobe nearest cells — struct sort on
-    * (−sim, cell) reproduces the batch window's (sim desc, cell asc)
-    * tie-break exactly. Candidates then come from a stream-static
+    * 1-row broadcast, and per query the first nprobe entries of
+    * [[graft.functions.Similarity.nearestFirst]] are the nprobe nearest
+    * cells — its struct sort on (−sim, cell) reproduces the batch
+    * window's (sim desc, cell asc) tie-break exactly. Candidates then come from a stream-static
     * equi-join against the stored postings on the probed cell, and the
     * per-query top-k ranks per micro-batch in `flatMapGroupsWithState`
     * (sort by cs desc / n_id asc — the batch serve's window order),
@@ -776,17 +776,12 @@ object StreamingOps {
                      Some(java.time.Duration.ofHours(1))): Dataset[AnnHit] = {
     import queries.sparkSession.implicits._
     val dot = graft.functions.Similarity.dot _
-    val centArr = centroids
-      .withColumn("cnrm", sqrt(dot(col("cv"), col("cv"))))
-      .agg(collect_list(struct(col("cell").cast("long").as("cell"), col("cv"),
-        col("cnrm"))).as("cents"))
     val qn = graft.functions.Similarity.withNorm(queries, "vec_id", "embedding")
       .select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq"))
-    val probed = qn.crossJoin(broadcast(centArr))
+    val probed = qn.crossJoin(broadcast(centroidArray(centroids)))
       .select(col("q_id"), col("vq"), col("nq"),
-        explode(slice(array_sort(transform(col("cents"), c =>
-          struct((-dot(col("vq"), c.getField("cv")) / (col("nq") * c.getField("cnrm")))
-            .as("negsim"), c.getField("cell").as("cell")))), 1, nprobe)).as("pr"))
+        explode(slice(graft.functions.Similarity.nearestFirst(col("cents"), col("vq"), col("nq"),
+          "cell", "cv", "cnrm"), 1, nprobe)).as("pr"))
       .select(col("q_id"), col("vq"), col("nq"), col("pr.cell").as("cell"))
     val cn = graft.functions.Similarity.withNorm(
         postings.withColumn("cell", col("cell").cast("long")),
@@ -816,23 +811,27 @@ object StreamingOps {
     * the per-batch cost a live ingest pays. The batch append's
     * `assignCells` argmax is a groupBy aggregation (stateful on a
     * stream), so the argmax here is the [[knnIvfStream]] expression
-    * trick instead: centroids aggregate to a 1-row array and
-    * `array_sort(transform(...))[1]` picks max-sim/lowest-cell — the
+    * trick instead: centroids aggregate to a 1-row array and the first
+    * entry of `nearestFirst` is the max-sim/lowest-cell one — the
     * identical winner (spec-asserted equal to the batch delta contents
     * row-for-row).
     */
-  def ivfAssignStream(vectors: DataFrame, centroids: DataFrame): DataFrame = {
+  def ivfAssignStream(vectors: DataFrame, centroids: DataFrame): DataFrame =
+    graft.functions.Similarity.withNorm(vectors, "vec_id", "embedding")
+      .crossJoin(broadcast(centroidArray(centroids)))
+      .select(col("vec_id"), col("v").as("embedding"),
+        element_at(graft.functions.Similarity.nearestFirst(col("cents"), col("v"), col("nrm"),
+          "cell", "cv", "cnrm"), 1).getField("cell").as("cell"))
+
+  /** The centroid table as ONE row: `cents`, an array of struct(cell, cv,
+    * cnrm) for [[graft.functions.Similarity.nearestFirst]].
+    */
+  private def centroidArray(centroids: DataFrame): DataFrame = {
     val dot = graft.functions.Similarity.dot _
-    val centArr = centroids
+    centroids
       .withColumn("cnrm", sqrt(dot(col("cv"), col("cv"))))
       .agg(collect_list(struct(col("cell").cast("long").as("cell"), col("cv"),
         col("cnrm"))).as("cents"))
-    graft.functions.Similarity.withNorm(vectors, "vec_id", "embedding")
-      .crossJoin(broadcast(centArr))
-      .select(col("vec_id"), col("v").as("embedding"),
-        element_at(array_sort(transform(col("cents"), c =>
-          struct((-dot(col("v"), c.getField("cv")) / (col("nrm") * c.getField("cnrm")))
-            .as("negsim"), c.getField("cell").as("cell")))), 1).getField("cell").as("cell"))
   }
 
   /** PQ encode of a vector stream against the STORED codebooks — the
