@@ -81,6 +81,27 @@ object GraftSql {
   *    so this takes effect only where a graft session is built before the
   *    JVM opens its first `file:` path through Hadoop; every graft main
   *    does so (`LocalFilesSpec` checks the session's filesystem).
+  *
+  * Operator execution.
+  *  - `spark.sql.execution.usePartitionEvaluator` = true. Without it an
+  *    operator's `doExecute` builds its RDD with `mapPartitionsWithIndex`,
+  *    and `SparkContext.clean` reads the capturing class with ASM and
+  *    Java-serializes the whole closure on the driver, at every
+  *    execution, only to check that it is serializable. The closure holds
+  *    the plan nodes, and through an in-memory source (a stream's
+  *    micro-batch, a `LocalTableScan`) every input row: a stream drain
+  *    serialized its 75k-row batches several times a micro-batch. With it
+  *    Spark builds a `MapPartitionsWithEvaluatorRDD` around a partition
+  *    evaluator factory and cleans nothing. The operators that take this
+  *    path are `WholeStageCodegenExec`, `ProjectExec`, `FilterExec`,
+  *    `WindowExec`, `WindowGroupLimitExec`, `SortMergeJoinExec` and
+  *    `ColumnarToRowExec`/`RowToColumnarExec`. The task binary still
+  *    serializes the same objects once per stage, so results, plans, jobs
+  *    and tasks are unchanged. Spark's state-store closures and
+  *    `runJob`/`RDD.collect` still clean theirs (ARCHITECTURE.md, design
+  *    rule 14). The conf is Spark-internal (since 3.5, default false);
+  *    `PartitionEvaluatorSpec` checks that every whole-stage stage of the
+  *    benchmark's keys and of a stream's micro-batch takes this path.
   */
 object SessionConfs {
   val CodegenCacheEntries = 4096L
@@ -90,7 +111,8 @@ object SessionConfs {
     "spark.sql.codegen.useIdInClassName" -> false,
     "spark.sql.streaming.checkpointFileManagerClass" ->
       classOf[org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager].getName,
-    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName)
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+    "spark.sql.execution.usePartitionEvaluator" -> true)
 }
 
 /** ONE session builder for every artifact-producing runner (Bench,
@@ -119,8 +141,9 @@ object SessionConfs {
   *    SMJ where a hash build cannot fit;
   *  - UTC + no UI;
   *  - the engine-wide [[SessionConfs]]: the generated-class cache sized to
-  *    graft's working set, and checkpoint commits and local file creation
-  *    that fork no process;
+  *    graft's working set, checkpoint commits and local file creation
+  *    that fork no process, and whole-stage stages that clean no closure
+  *    on the driver;
   *  - `nanosAsLong` on from the start, the value `Tables.events` sets on
   *    its first read anyway: flipped mid-session, it would change the
   *    schema memo key of every table opened before it, and each of those

@@ -17,14 +17,6 @@ class CodegenCacheSpec extends SparkSpec {
   private def source(path: String): String =
     new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
 
-  /** The keys the benchmark's `essentials` workload cycles through. */
-  private val essentials: Seq[String] = {
-    val batch = source("graftbench/src/graftbench/Batch.scala")
-    val list = "val Keys: Seq\\[String\\] = Seq\\(([^)]*)\\)".r.findFirstMatchIn(batch)
-      .getOrElse(fail("no Keys list in Batch.scala")).group(1)
-    "\"([a-z0-9_]+)\"".r.findAllMatchIn(list).map(_.group(1)).toSeq
-  }
-
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   test("every session builder applies the session confs of the one constant") {
@@ -68,11 +60,11 @@ class CodegenCacheSpec extends SparkSpec {
   }
 
   test("a second pass over the essentials keys compiles no class") {
-    assert(essentials.size === 21)
+    assert(essentialsKeys.size === 21)
     val dir = smallestTestDir
     val defs = SparkEntry.queries
     SigIndex.stageClusters(spark, dir)
-    def pass(): Seq[(String, Long)] = essentials.map { k =>
+    def pass(): Seq[(String, Long)] = essentialsKeys.map { k =>
       val c0 = compiles
       defs(k)(spark, dir).write.format("noop").mode("overwrite").save()
       Scoped.releaseAll(spark)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
@@ -50,10 +49,7 @@ class FunctionCatalogSpec extends SparkSpec {
   }
 
   test("building every benchmark batch query leaves the session's function registry unchanged") {
-    val src = new String(Files.readAllBytes(Paths.get("graftbench/src/graftbench/Batch.scala")), UTF_8)
-    val body = """(?s)val Keys: Seq\[String\] = Seq\((.*?)\)""".r.findFirstMatchIn(src)
-      .getOrElse(fail("no Batch.Keys in graftbench/src/graftbench/Batch.scala")).group(1)
-    val keys = "\"([^\"]+)\"".r.findAllMatchIn(body).map(_.group(1)).toSeq
+    val keys = essentialsKeys
     assert(keys.size > 10, s"parsed too few keys: $keys")
     val dir = smallestTestDir
     val s = spark.newSession()

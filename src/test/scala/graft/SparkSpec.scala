@@ -40,6 +40,17 @@ trait SparkSpec extends AnyFunSuite {
       .filter(d => new java.io.File(d).isDirectory)
   }
 
+  /** The keys the benchmark's `essentials` workload cycles through,
+    * read from graftbench's `Batch.Keys`.
+    */
+  lazy val essentialsKeys: Seq[String] = {
+    val batch = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("graftbench/src/graftbench/Batch.scala")), "UTF-8")
+    val list = "val Keys: Seq\\[String\\] = Seq\\(([^)]*)\\)".r.findFirstMatchIn(batch)
+      .getOrElse(fail("no Keys list in graftbench/src/graftbench/Batch.scala")).group(1)
+    "\"([a-z0-9_]+)\"".r.findAllMatchIn(list).map(_.group(1)).toSeq
+  }
+
   /** The smallest sf dir TESTDATA.md documents; cancels the test if none is present. */
   def smallestTestDir: String =
     testDataDirs.headOption.getOrElse(cancel("no sf dir of TESTDATA.md is present"))
